@@ -309,20 +309,10 @@ def x09_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: the finish-latch / resume contract
     (`/root/reference/src/event/hc/hc-event.c:223-259`) — a satisfied
     latch never refires."""
-    import os
-    import shutil
-    import tempfile
-
     from ocr_spark.operators.lineage import read_metrics, run_extraction
+    from ocr_spark.scratch import scratch_dir
 
-    # app-id in the key: concurrent gate sessions must not rmtree each
-    # other's in-progress run directory (ADVICE r04)
-    key = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ocr_spark_x09_{key}")
-    if os.path.isdir(out):
-        shutil.rmtree(out)  # fresh run every gate invocation
+    out = scratch_dir(spark, "x09_run")
     pages = _fixture_pages(spark).select("url", "html", "text")
     run_extraction(spark, pages, out, run_id="gate", max_buckets=3)
     run_extraction(spark, pages, out, run_id="gate")

@@ -8,18 +8,11 @@ The Spark re-expression of three reference mechanisms (SURVEY.md §1.3):
   - finish-latch countdown (`src/event/hc/hc-event.c:223-259`)
     -> run complete ⇔ metrics rows == bucket count.
 
-Commit protocol (order matters — write data, then the marker, mirroring
-the satisfy-then-seal CAS order in `hc-event.c:155-172`):
-  1. committed = markers for run_id             (metrics table)
-  2. todo      = input buckets ∖ committed      (left_anti — the restart)
-  3. extract todo -> dynamic partition overwrite of data/bucket=N
-     (re-running an uncommitted bucket overwrites its partial output:
-     idempotent at any kill point)
-  4. read BACK the written data -> metrics rows -> append markers
-     (markers attest bytes on disk, not bytes in memory)
-
-A killed run therefore resumes recomputing exactly the uncommitted
-buckets (FIXTURES.md §3 restart test).
+The write-data-then-marker protocol (committed markers -> todo buckets
+-> dynamic-overwrite data write -> read-back -> IDEM markers) is
+``operators.commit``'s; this module supplies the extract step and the
+per-bucket metrics aggregate. A killed run resumes recomputing exactly
+the uncommitted buckets (FIXTURES.md §3 restart test).
 """
 
 from __future__ import annotations
@@ -30,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.extract.pipeline import _extract_batches, EXTRACT_DDL
+from ocr_spark.operators.commit import commit_run, committed_keys, read_markers
 from ocr_spark.operators.partitioning import size_bucket_repartition
 
 
@@ -42,11 +36,7 @@ def _data_path(out_dir: str) -> str:
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _metrics_path(out_dir)
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # first run: no metrics yet
-        return None
+    return read_markers(spark, _metrics_path(out_dir))
 
 
 def assert_unique_urls(pages: DataFrame) -> None:
@@ -80,86 +70,34 @@ def run_extraction(
         pages.select("url", "html", "text"), n_salt=n_salt
     )
 
-    committed = None
-    metrics = read_metrics(spark, out_dir)
-    if metrics is not None:
-        committed = (
-            metrics.filter(F.col("run_id") == run_id)
-            .select(F.col("partition_id").alias("bucket"))
-            .distinct()
-        )
-        todo = bucketed.join(F.broadcast(committed), "bucket", "left_anti")
-    else:
-        todo = bucketed
-
-    if max_buckets is not None:
-        keep = [
-            r["bucket"]
-            for r in todo.select("bucket").distinct().orderBy("bucket").limit(max_buckets).collect()
-        ]
-        todo = todo.filter(F.col("bucket").isin(keep))
-
-    todo_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
-    if not todo_buckets:
-        return {"run_id": run_id, "buckets_processed": 0, "rows": 0}
-
-    extracted = todo.mapInPandas(_extract_batches, schema=EXTRACT_DDL)
-
-    # 1) data first — dynamic overwrite touches only the todo buckets
-    (
-        extracted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(_data_path(out_dir))
+    n_buckets, n_rows = commit_run(
+        spark,
+        bucketed,
+        key="bucket",
+        data_path=_data_path(out_dir),
+        marker_path=_metrics_path(out_dir),
+        run_id=run_id,
+        produce=lambda todo: todo.mapInPandas(_extract_batches, schema=EXTRACT_DDL),
+        markers=_bucket_metrics,
+        marker_key="partition_id",
+        limit=max_buckets,
     )
+    return {"run_id": run_id, "buckets_processed": n_buckets, "rows": n_rows}
 
-    # 2) markers second, derived from what is actually on disk
-    written = spark.read.parquet(_data_path(out_dir)).filter(
-        F.col("bucket").isin(todo_buckets)
+
+def _bucket_metrics(written: DataFrame) -> DataFrame:
+    return written.groupBy(F.col("bucket").cast("int").alias("partition_id")).agg(
+        F.count(F.lit(1)).alias("input_count"),
+        F.expr("bit_xor(xxhash64(url, extracted_text))").alias("checksum"),
+        (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_time_ms"),
     )
-    new_metrics = (
-        written.groupBy(F.col("bucket").cast("int").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("input_count"),
-            F.expr("bit_xor(xxhash64(url, extracted_text))").alias("checksum"),
-            (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_time_ms"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "input_count",
-            "checksum",
-            "wall_time_ms",
-            F.current_timestamp().alias("committed_at"),
-        )
-    )
-    # IDEM guard: never double-write a marker for the same (run, bucket)
-    existing = read_metrics(spark, out_dir)
-    if existing is not None:
-        new_metrics = new_metrics.join(
-            existing.filter(F.col("run_id") == run_id).select("partition_id"),
-            "partition_id",
-            "left_anti",
-        )
-    n_rows = written.count()
-    new_metrics.write.mode("append").parquet(_metrics_path(out_dir))
-    return {
-        "run_id": run_id,
-        "buckets_processed": len(todo_buckets),
-        "rows": n_rows,
-    }
 
 
 def run_complete(spark: SparkSession, out_dir: str, run_id: str, n_buckets: int) -> bool:
     """Latch semantics: the run is complete when the marker count reaches
     the bucket count."""
-    m = read_metrics(spark, out_dir)
-    if m is None:
-        return False
-    return (
-        m.filter(F.col("run_id") == run_id).select("partition_id").distinct().count()
-        == n_buckets
-    )
+    committed = committed_keys(spark, _metrics_path(out_dir), run_id, "partition_id")
+    return committed is not None and committed.count() == n_buckets
 
 
 def size_class_latches(
@@ -198,15 +136,14 @@ def size_class_latches(
         .groupBy("size_class")
         .agg(F.count(F.lit(1)).alias("n_expected"))
     )
-    m = read_metrics(spark, out_dir)
-    if m is None:
+    committed = committed_keys(spark, _metrics_path(out_dir), run_id, "partition_id")
+    if committed is None:
         committed = spark.createDataFrame([], "size_class int, n_committed long")
     else:
         committed = (
-            m.filter(F.col("run_id") == run_id)
-            .select("partition_id")
-            .distinct()
-            .select((F.col("partition_id") / n_salt).cast("int").alias("size_class"))
+            committed.select(
+                (F.col("partition_id") / n_salt).cast("int").alias("size_class")
+            )
             .groupBy("size_class")
             .agg(F.count(F.lit(1)).alias("n_committed"))
         )

@@ -19,13 +19,12 @@ DuckDB oracle replays it exactly). Cross-engine arithmetic is integer
 token counts and one double floor-division (exact to 2^53).
 
 Scale shape: the bin rollup and the cumsum shuffle once on pack_group
-(the packer already partitioned by it); the shard list collected to the
-driver is control-plane metadata (corpus_tokens / SHARD_TOKENS rows —
-~25M entries at 100 TB, the same order as a file manifest, and a real
-deployment pages it per pack_group); the data write is one
-dynamic-partition-overwrite parquet job partitioned by shard, and
-markers are derived from read-back on-disk data, never from in-memory
-state.
+(the packer already partitioned by it); the write-data-then-marker
+protocol is ``operators.commit``'s: the todo set is a distributed
+anti-join against the broadcast committed markers (only its count
+reaches Python), the data write is one dynamic-partition-overwrite
+parquet job partitioned by shard, and markers are derived from
+read-back on-disk data, never from in-memory state.
 """
 
 from __future__ import annotations
@@ -36,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ocr_spark.operators.commit import commit_run, read_markers
 from ocr_spark.plans import register
 
 SHARD_TOKENS = 4096  # shard budget in true-BPE tokens (64 full PACK_CAP bins)
@@ -79,10 +79,7 @@ def shard_assign(packed: DataFrame, shard_tokens: int = SHARD_TOKENS) -> DataFra
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(_manifest_path(out_dir))
-    except Exception:  # first run: no manifest yet
-        return None
+    return read_markers(spark, _manifest_path(out_dir))
 
 
 def write_shards(
@@ -95,97 +92,44 @@ def write_shards(
 ) -> dict:
     """Execute (or resume) one shard-writing run. ``max_shards``
     processes only the first K uncommitted shards — the test hook that
-    simulates a kill between shard commits (x09's max_buckets twin).
-
-    Protocol per run: committed = manifest markers for run_id; todo =
-    assigned shards ∖ committed; write todo shard data (dynamic
-    partition overwrite, so re-running an uncommitted shard replaces
-    its partial file); read BACK the written data and append manifest
-    rows derived from disk."""
+    simulates a kill between shard commits (x09's max_buckets twin)."""
     assigned = shard_assign(packed, shard_tokens).withColumn(
         "shard_id",
         F.concat_ws("-", F.col("pack_group"), F.col("shard_idx")),
     )
-    # one barrier: the shard list, the filter, and the write must all see
+    # one barrier: the todo set, the write and the read-back must all see
     # the SAME assignment without re-running the packer three times
     assigned = assigned.localCheckpoint()
-
-    shards = [
-        r["shard_id"]
-        for r in assigned.select("shard_id")
-        .distinct()
-        .orderBy("shard_id")
-        .collect()
-    ]
-    manifest = read_manifest(spark, out_dir)
-    committed: set[str] = set()
-    if manifest is not None:
-        committed = {
-            r["shard_id"]
-            for r in manifest.filter(F.col("run_id") == run_id)
-            .select("shard_id")
-            .distinct()
-            .collect()
-        }
-    todo = [s for s in shards if s not in committed]
-    if max_shards is not None:
-        todo = todo[:max_shards]
-    if not todo:
-        return {"run_id": run_id, "shards_processed": 0}
-
-    # The todo set is data-sized (19.5k shards in the 192k-doc E2E,
-    # millions at 100 TB), so it travels as a broadcast DataFrame and a
-    # semi-join — never as an O(|todo|) literal IN expression built on
-    # the driver.
-    todo_df = F.broadcast(
-        spark.createDataFrame([(s,) for s in todo], "shard_id string")
+    n_shards, _ = commit_run(
+        spark,
+        assigned,
+        key="shard_id",
+        data_path=_data_path(out_dir),
+        marker_path=_manifest_path(out_dir),
+        run_id=run_id,
+        markers=_shard_manifest,
+        limit=max_shards,
     )
+    return {"run_id": run_id, "shards_processed": n_shards}
 
-    # 1) data first — dynamic overwrite touches only the todo shards
-    (
-        assigned.join(todo_df, "shard_id", "left_semi")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(_data_path(out_dir))
-    )
 
-    # 2) markers second, derived from what is actually on disk
-    written = spark.read.parquet(_data_path(out_dir)).join(
-        todo_df, "shard_id", "left_semi"
+def _shard_manifest(written: DataFrame) -> DataFrame:
+    return written.groupBy("shard_id", "pack_group", "shard_idx").agg(
+        F.countDistinct("bin_idx").cast("int").alias("n_bins"),
+        F.count(F.lit(1)).cast("int").alias("n_chunks"),
+        F.sum("n_chunk_tokens").cast("long").alias("n_tokens"),
+        F.expr("bit_xor(xxhash64(doc_id, chunk_idx, n_chunk_tokens))").alias(
+            "checksum"
+        ),
+    ).select(
+        "shard_id",
+        F.col("pack_group").cast("int").alias("pack_group"),
+        F.col("shard_idx").cast("int").alias("shard_idx"),
+        "n_bins",
+        "n_chunks",
+        "n_tokens",
+        "checksum",
     )
-    new_rows = (
-        written.groupBy("shard_id", "pack_group", "shard_idx")
-        .agg(
-            F.countDistinct("bin_idx").cast("int").alias("n_bins"),
-            F.count(F.lit(1)).cast("int").alias("n_chunks"),
-            F.sum("n_chunk_tokens").cast("long").alias("n_tokens"),
-            F.expr("bit_xor(xxhash64(doc_id, chunk_idx, n_chunk_tokens))").alias(
-                "checksum"
-            ),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "shard_id",
-            F.col("pack_group").cast("int").alias("pack_group"),
-            F.col("shard_idx").cast("int").alias("shard_idx"),
-            "n_bins",
-            "n_chunks",
-            "n_tokens",
-            "checksum",
-            F.current_timestamp().alias("committed_at"),
-        )
-    )
-    # IDEM guard: never double-write a marker for the same (run, shard)
-    existing = read_manifest(spark, out_dir)
-    if existing is not None:
-        new_rows = new_rows.join(
-            existing.filter(F.col("run_id") == run_id).select("shard_id"),
-            "shard_id",
-            "left_anti",
-        )
-    new_rows.write.mode("append").parquet(_manifest_path(out_dir))
-    return {"run_id": run_id, "shards_processed": len(todo)}
 
 
 def _p06_oracle_sql() -> str:
@@ -226,25 +170,16 @@ def p06_shard_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-SQL shard rollup exactly: every packed chunk lands in exactly
     one shard across the two writing runs, token counts exact, none
     recomputed by the third run."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ocr_spark.operators.bpe import bpe_token_arrays_production
     from ocr_spark.operators.chunking import (
         CHUNK_TOKENS,
         chunk_token_arrays,
         pack_chunks,
     )
+    from ocr_spark.scratch import scratch_dir
     from ocr_spark.sources.io import load_table
 
-    key = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ocr_spark_p06_{key}")
-    if os.path.isdir(out):
-        shutil.rmtree(out)  # fresh run every gate invocation
-
+    out = scratch_dir(spark, "p06_run")
     docs = load_table(spark, sf_dir, "documents")
     toks = bpe_token_arrays_production(docs).localCheckpoint()
     chunks = chunk_token_arrays(toks, window=CHUNK_TOKENS, stride=CHUNK_TOKENS)

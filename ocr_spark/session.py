@@ -26,6 +26,23 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 256
 
 
+# Session-wide settings, applied by build_session and by the spark-submit
+# entry point (tools/extract_job.py) alike.
+CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    # Byte cap is the real giant-page guard: a batch of 10 MB skew-tail
+    # pages is cut at ~6 rows regardless of the row cap, so Python
+    # worker memory stays bounded at any corpus scale.
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -42,22 +59,10 @@ def build_session(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        # Byte cap is the real giant-page guard: a batch of 10 MB skew-tail
-        # pages is cut at ~6 rows regardless of the row cap, so Python
-        # worker memory stays bounded at any corpus scale.
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(map={**CONF, **(extra_conf or {})})
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -116,18 +116,13 @@ def _stage_single_events_file(spark: SparkSession, sf_dir: str) -> str:
     motivated removing arrival order from the semantics entirely —
     the s05 staging pattern. Always overwritten: no staleness."""
     import glob
-    import hashlib
     import os
     import shutil
-    import tempfile
 
-    # app-id in the key: two concurrent gate sessions on the same sf_dir
-    # must not rmtree each other's staged file mid-stream (ADVICE r04)
-    key = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:10]
-    staging = os.path.join(tempfile.gettempdir(), f"ocr_spark_s04_{key}")
-    tmp = staging + "_tmp"
+    from ocr_spark.scratch import scratch_dir
+
+    staging = scratch_dir(spark, "s04_events")
+    tmp = scratch_dir(spark, "s04_events_tmp")
     (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         .where("ts IS NOT NULL")
@@ -137,9 +132,6 @@ def _stage_single_events_file(spark: SparkSession, sf_dir: str) -> str:
         .parquet(tmp)
     )
     (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    os.makedirs(staging)
     shutil.move(src, os.path.join(staging, "events_staged.parquet"))
     shutil.rmtree(tmp)
     return staging
@@ -248,24 +240,12 @@ def s05_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous extraction: the fixture corpus is staged to a temp
     parquet dir and drained through the streaming pipeline; the oracle is
     the generator-side golden truth (same VALUES table family as x01)."""
-    import os
-    import tempfile
-
     from ocr_spark.extract.catalog import _N_DOCS
     from ocr_spark.fixtures import pages_df
+    from ocr_spark.scratch import scratch_dir
 
-    # staging dir is keyed by the fixture doc count (an _N_DOCS change
-    # can never serve stale pages whose oracle no longer matches) AND by
-    # the application id (two concurrent sessions must not race the
-    # initial overwrite write — ADVICE r04's staging-dir finding)
-    staging = os.path.join(
-        tempfile.gettempdir(),
-        f"ocr_spark_s05_pages_{_N_DOCS}_"
-        f"{spark.sparkContext.applicationId.replace(':', '_')}",
-    )
-    marker = os.path.join(staging, "_SUCCESS")
-    if not os.path.exists(marker):
-        pages_df(spark, _N_DOCS).write.mode("overwrite").parquet(staging)
+    staging = scratch_dir(spark, "s05_pages")
+    pages_df(spark, _N_DOCS).write.mode("overwrite").parquet(staging)
     _finish(ingest.streaming_extract(spark, staging, name="s05_out"))
     return spark.table("s05_out").orderBy("url")
 

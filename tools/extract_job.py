@@ -26,6 +26,14 @@ import time
 from pyspark.sql import SparkSession
 
 
+def job_session() -> SparkSession:
+    """spark-submit owns master and cluster conf; getOrCreate attaches to
+    it and applies the session-wide settings of ocr_spark.session.build_session."""
+    from ocr_spark.session import CONF
+
+    return SparkSession.builder.appName("ocr_spark_extract").config(map=CONF).getOrCreate()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="pages parquet dir")
@@ -39,18 +47,7 @@ def main() -> None:
                     "noise between runs dominates single-shot timings)")
     args = ap.parse_args()
 
-    # spark-submit owns master/conf; getOrCreate attaches to it. Session
-    # defaults (Arrow, AQE, batch size) that were not set on the CLI are
-    # applied here for parity with ocr_spark.session.build_session.
-    from ocr_spark.session import ARROW_BATCH_ROWS
-
-    spark = (
-        SparkSession.builder.appName("ocr_spark_extract")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = job_session()
     spark.sparkContext.setLogLevel("WARN")
     cores = spark.sparkContext.defaultParallelism
 

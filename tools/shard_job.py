@@ -26,7 +26,6 @@ import argparse
 import json
 import os
 import random
-import shutil
 import sys
 import tempfile
 import time
@@ -76,11 +75,16 @@ def main() -> int:
         shard_assign,
         write_shards,
     )
+    from ocr_spark.scratch import scratch_dir
     from ocr_spark.session import build_session
 
     spark = build_session("shard-e2e", cores=args.cores)
 
-    corpus_path = os.path.join(tempfile.gettempdir(), "ocr_spark_shard_e2e_corpus")
+    # content-keyed: a run of another size never reuses this corpus
+    corpus_path = os.path.join(
+        tempfile.gettempdir(),
+        f"ocr_spark_shard_e2e_corpus_{args.n_docs}x{args.words}",
+    )
     if not os.path.isdir(corpus_path):
         pdf = synth_documents(args.n_docs, args.words)
         spark.createDataFrame(pdf).repartition(args.cores * 4).write.mode(
@@ -89,9 +93,7 @@ def main() -> int:
     docs = spark.read.parquet(corpus_path)
     n_docs = docs.count()
 
-    out_dir = os.path.join(tempfile.gettempdir(), "ocr_spark_shard_e2e_out")
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
+    out_dir = scratch_dir(spark, "shard_e2e_out")
 
     def packed_frame():
         toks = bpe_token_arrays_production(docs)
