@@ -1,7 +1,9 @@
-"""Benchmark driver: runs the headline catalog queries at
+"""Benchmark driver: times every registered catalog query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS], writes the per-query walls to
+BENCH/bench_detail.json and prints a short summary as its last line:
+  {"metric": ..., "value": N, "unit": "sec", "sf": ..., "cores": ...,
+   "x01_extract_docs_per_sec": ..., "n_queries": ..., "detail": path}
 
 Each query is forced with a count() (no driver-side collect of payloads).
 Caveat (documented round 4): count() lets Catalyst prune unreferenced
@@ -23,105 +25,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from ocr_spark.plans import QUERIES, load_all
 from ocr_spark.session import build_session, default_parallelism
 
-# Every operator family is represented (VERDICT r02 item 8: no family
-# unbenched).  The cross-round comparable total sums the q/d/t/e
-# prefixes only (same rule since round 1); s/x/p/g/w timings are
-# reported alongside but kept out of the total so it stays comparable.
-HEADLINE = [
-    "q01_pricing_summary",
-    "q02_filter_project",
-    "q03_shipping_priority",
-    "q05_region_revenue",
-    "q06_forecast_revenue",
-    "q07_topk_per_group",
-    "q08_running_total",
-    "q09_sessionize",
-    "q10_top_orders",
-    "q13_distinct_agg",
-    "q14_rollup",
-    "q16_date_json_funcs",
-    "q19_tumbling_window",
-    "q20_asof_join",
-    "q23_percentiles",
-    "q04_order_priority",
-    "q24_correlated_subquery",
-    "q25_range_frame",
-    "q26_hash_split",
-    "q28_range_join",
-    "q29_stratified_sample",
-    "q31_latest_per_key",
-    "q32_rank_family",
-    "g01_pagerank",
-    "d01_exact_dedup",
-    "d03_minhash_lsh",
-    "d04_simhash",
-    "d05_embedding_neardup",
-    "d07_dupgram_filter",
-    "d08_incremental_dedup",
-    "t02_quality_score",
-    "t05_title_editdist",
-    "t06_langid_ngram",
-    "t04_fingerprint",
-    "t07_pii_redact",
-    "t08_vocab_topk",
-    "t09_url_stats",
-    "p01_chunking",
-    "p02_sequence_pack",
-    "e01_knn_bruteforce",
-    "e02_ann_lsh",
-    "e03_centroid_assign",
-    "e04_ivf_knn",
-    "e05_kmeans",
-    "d02_ngram_jaccard",
-    "d06_dup_clusters",
-    "d09_canonical_selection",
-    "d10_neardup_exact",
-    "t01_token_stats",
-    "t03_lang_guess",
-    "t10_bm25",
-    "t11_bpe_token_count",
-    "w01_wavefront_editdist",
-    "w02_tiled_cholesky",
-    "x08_warc_parse",
-    "x04_multimodal_features",
-    "x05_frame_sample",
-    "x06_audio_windows",
-    "s01_stream_tumbling",
-    "s02_stream_sessions",
-    "s03_stream_dedup",
-    "s04_stream_milestones",
-    "s05_stream_extract",
-    "s06_stream_static_join",
-    "s07_stream_sliding",
-    "s08_stream_stream_join",
-    "d11_bloom_membership",
-    "t12_repetition_stats",
-    # -- round 4 additions -------------------------------------------------
-    "d12_substring_dedup",
-    "t13_bpe_tokenize",
-    "p03_bpe_pack",
-    "d13_benchmark_decontam",
-    "t14_blocklist_filter",
-    "t15_url_canonicalize",
-    "p04_domain_mix",
-    "t16_quality_classifier",
-    "p05_curation_funnel",
-    "x09_lineage_metrics",
-    # -- round 5 additions -------------------------------------------------
-    "p06_shard_writer",
-    "t17_lm_likelihood",
-    "p07_training_order",
-    "t18_bpe_train",
-    "d14_semantic_dedup",
-    "p08_importance_resample",
-    "p09_perplexity_buckets",
-    "d15_segment_dedup",
-]
+DETAIL = "BENCH/bench_detail.json"  # repo-relative
 
 
 def main() -> None:
@@ -133,7 +43,7 @@ def main() -> None:
 
     # Generic session warm-up (parquet reader, codegen, shuffle paths) so
     # the first timed query is not charged one-time JVM startup; no
-    # headline query's own plan is pre-run.
+    # catalog query's own plan is pre-run.
     from pyspark.sql import functions as F
 
     warm = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
@@ -141,12 +51,9 @@ def main() -> None:
 
     # two timed passes per query, min reported: single shots on this
     # shared-host VM vary ±20% (BENCH/BASELINE.md methodology); min-of-N
-    # is applied uniformly so totals are comparable across rounds
+    # is applied uniformly so totals are comparable across runs
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
+    for name, fn in QUERIES.items():
         # streaming entries drain a full Structured Streaming job per
         # pass and are excluded from the comparable total — one pass
         # keeps the whole bench bounded
@@ -163,19 +70,25 @@ def main() -> None:
         from ocr_spark.extract.bench import extraction_throughput
 
         extract_rate = extraction_throughput(spark)
-        timings["x01_extract_docs_per_sec"] = extract_rate
+    spark.stop()
 
+    # the total sums the q/d/t/e prefixes only (same rule since round
+    # 1); s/x/p/g/w timings are reported alongside
     total = round(sum(v for k, v in timings.items() if k.startswith(("q", "d", "t", "e"))), 3)
-    out = {
+    summary = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
-        "queries": timings,
         "sf": sf,
         "cores": cores,
+        "x01_extract_docs_per_sec": extract_rate,
+        "n_queries": len(timings),
+        "detail": DETAIL,
     }
-    spark.stop()
-    print(json.dumps(out))
+    with open(os.path.join(REPO, DETAIL), "w") as fh:
+        json.dump({**summary, "queries": timings}, fh, indent=1)
+        fh.write("\n")
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

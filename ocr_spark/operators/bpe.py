@@ -5,10 +5,18 @@ task-granular data walks) has no tokenizer; this operator exists because
 a training-data pipeline ultimately budgets context by MERGED tokens —
 VERDICT r03 "What's missing" #3.
 
-Design (Spark-first, zero Python on the hot path):
+Design: ONE Spark encoder plus an independent DuckDB replay.
 
-A trained BPE merge table is applied in RANK ORDER as sequential string
-replaces over a sentinel-encoded form of each document:
+The Spark path (``bpe_tokenize_stats_production`` /
+``bpe_token_arrays_production``) ships the merge table as a broadcast
+rank dict and runs the classic per-word priority merge loop (the GPT-2
+``bpe()`` loop) inside Arrow ``mapInPandas`` batches with a per-task
+word cache: cost is independent of vocabulary size, the shape a
+50k-merge deployment runs (VERDICT r04 #2/#3).  t13/p03/p06 run it.
+
+The DuckDB oracle replays the same tokenization a different way: the
+merge table applied in RANK ORDER as sequential string replaces over a
+sentinel-encoded form of each document:
 
   pre-tokens (the t11 GPT-2-shaped regex) ->
   every symbol wrapped in its OWN separators ("<US>c<US>" per char),
@@ -23,34 +31,15 @@ second occurrence — caught by the property test), and the <RS> word
 boundary can never match a merge pattern, so merges stay word-local.
 
 This sequential-replace form is EXACTLY the classic lowest-rank-first
-BPE (the GPT-2 ``bpe()`` loop): merging pair r can only create pairs
-that contain r's output symbol, and any merge consuming that symbol was
-necessarily learned later, so no merge with rank < r can become
-applicable after r — applying merges once, in rank order, visits the
-same merge sequence the priority loop does (property-tested against the
-classic implementation in tests/test_bpe.py).
-
-Everything is builtin string expressions (regexp_extract_all, transform,
-replace, length), so the 100 TB plan is one codegen'd narrow scan; the
-merge table travels inside the expression tree (a few KB — the
-broadcast-variable degenerate case). The DuckDB oracle evaluates the
-IDENTICAL encode/replace/length arithmetic, so the gate covers the full
-tokenization byte-exactly (per-doc md5 of the merged encoding), not just
-counts.
-
-TWO EXECUTION MODES share this contract:
-
-* chained-replace (above) — all-JVM, exact, the oracle-replay mode the
-  DuckDB gate mirrors literally; O(n_merges) string passes per doc, so
-  usable only at demo vocabulary sizes (N_MERGES=128 here);
-* production (``bpe_tokenize_stats_production`` /
-  ``bpe_token_arrays_production``) — broadcast merge-rank table + the
-  classic per-word priority merge loop inside Arrow ``mapInPandas``
-  batches with a per-task word cache; cost independent of vocabulary
-  size, the shape a 50k-merge deployment runs (VERDICT r04 #2/#3).
-  t13/p03 gate THIS mode; tests/test_bpe.py pins the two modes
-  byte-identical (shared tok_digest) and both equal to the classic
-  GPT-2 priority loop.
+BPE: merging pair r can only create pairs that contain r's output
+symbol, and any merge consuming that symbol was necessarily learned
+later, so no merge with rank < r can become applicable after r —
+applying merges once, in rank order, visits the same merge sequence the
+priority loop does (property-tested against the classic implementation
+in tests/test_bpe.py).  The Spark path emits the same sentinel encoding
+per document, so the gate compares the full tokenization byte-exactly
+(per-doc md5 of the merged encoding), not just counts.  t18's
+distributed trainer applies each learned merge with the same replace.
 """
 
 from __future__ import annotations
@@ -157,52 +146,12 @@ def classic_bpe_encode(word: str, merges: list[tuple[str, str]] | None = None) -
     return sym
 
 
-# --- the JVM expression + its DuckDB mirror -----------------------------------
+# --- sentinel cleaning (t18) + the DuckDB replay --------------------------------
 
 
 def _clean_col(text_col) -> Column:
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.replace(F.replace(c, F.lit(SEP), F.lit("")), F.lit(WB), F.lit(""))
-
-
-def _encode_col(text_col) -> Column:
-    """Sentinel encoding of a document: every char wrapped as SEP+c+SEP,
-    words joined by WB (which no merge pattern can span)."""
-    words = F.regexp_extract_all(_clean_col(text_col), F.lit(BPE_PATTERN), 0)
-    enc_word = lambda w: F.regexp_replace(w, "(.)", SEP + "$1" + SEP)  # noqa: E731
-    return F.concat_ws(WB, F.transform(words, enc_word))
-
-
-def merged_encoding_col(text_col) -> Column:
-    """The encoding after all merges applied in rank order (chained
-    builtin replace — stays inside the JVM expression tree)."""
-    enc = _encode_col(text_col)
-    for a, b in MERGES:
-        enc = F.replace(
-            enc,
-            F.lit(f"{SEP}{a}{SEP}{SEP}{b}{SEP}"),
-            F.lit(f"{SEP}{a}{b}{SEP}"),
-        )
-    return enc
-
-
-def bpe_token_array_col(text_col) -> Column:
-    """The merged token sequence as array<string>: split the encoding on
-    SEP; real tokens are the non-empty fragments that aren't the word
-    boundary (tokens can never equal WB — it's stripped from the text
-    before encoding)."""
-    enc = merged_encoding_col(text_col)
-    return F.filter(
-        F.split(enc, SEP), lambda t: (t != F.lit("")) & (t != F.lit(WB))
-    )
-
-
-def bpe_token_count_col(text_col) -> Column:
-    """True merged-token count: every token owns exactly two SEPs, so
-    n_tokens = count(SEP) / 2."""
-    enc = merged_encoding_col(text_col)
-    n_sep = F.length(enc) - F.length(F.replace(enc, F.lit(SEP), F.lit("")))
-    return (n_sep / 2).cast("int")
 
 
 _SEP_SQL = "chr(31)"
@@ -235,20 +184,17 @@ def _merge_replace_sql(expr: str, merges: list[tuple[str, str]]) -> str:
 _STAGE = 32
 
 
-# --- production-vocab path: broadcast merge ranks + mapInPandas ----------------
+# --- Spark path: broadcast merge ranks + mapInPandas ---------------------------
 #
-# The chained-replace form above is O(n_merges) full passes over a ~6x
-# sentinel-encoded copy of every document — exact and all-JVM, but
-# vocabulary-bounded: a production tokenizer ships ~50k merges, and 50k
-# string passes per doc (plus a 50k-deep expression tree through the
-# analyzer) is the wrong asymptotic shape (VERDICT r04 "What's wrong"
-# #3).  The production path is the classic per-WORD priority merge loop
-# with the rank table as a real broadcast variable, run inside Arrow
-# batches via mapInPandas: cost is O(distinct words x word_len x merges
-# PRESENT IN THE WORD), independent of vocabulary size, and a per-task
-# word cache collapses Zipf-repeated words to dict lookups.  Chained
-# replace stays as the oracle-replay mode (the DuckDB gate mirrors it
-# exactly); the two are property-tested equal at the demo vocab.
+# A sequential-replace encoder is O(n_merges) full passes over a ~6x
+# sentinel-encoded copy of every document, and as one Spark expression
+# tree it cannot even be planned at 1,024 merges (BENCH/BPE_SCALE.md).
+# The classic per-WORD priority merge loop with the rank table as a real
+# broadcast variable, run inside Arrow batches via mapInPandas, costs
+# O(distinct words x word_len x merges PRESENT IN THE WORD), independent
+# of vocabulary size, and a per-task word cache collapses Zipf-repeated
+# words to dict lookups.  The replace form survives only in the DuckDB
+# replay above, which is the oracle this path is gated against.
 
 
 def _bpe_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
@@ -287,8 +233,8 @@ def _encode_doc(
     cache: dict[str, list[str]],
 ) -> tuple[list[str], int, str]:
     """(flat token list, n_words, sentinel encoding) for one document —
-    the encoding string is byte-identical to ``merged_encoding_col`` so
-    the two modes share the md5 digest contract."""
+    the encoding string is byte-identical to the DuckDB replay's, so the
+    two engines share the md5 digest contract."""
     clean = text.replace(SEP, "").replace(WB, "")
     words = pat.findall(clean)
     toks: list[str] = []
@@ -308,11 +254,13 @@ def bpe_tokenize_stats_production(
     merges: list[tuple[str, str]] | None = None,
     text_col: str = "text",
 ) -> DataFrame:
-    """Production-vocab twin of ``bpe_tokenize_stats``: same 5-column
-    output (tok_digest byte-identical), built from a broadcast rank
-    table + per-word merge loop inside Arrow batches.  Scale shape: one
-    narrow MapInPandas over the corpus scan — no shuffle, no driver
-    round-trip, vocabulary ships once per executor as a broadcast."""
+    """Per-doc true-BPE stats: merged token count, pre-token (word)
+    count, merged-tokens-per-word, and the md5 of the merged encoding
+    (the digest gates the ENTIRE tokenization byte-exactly, not just the
+    count), built from a broadcast rank table + per-word merge loop
+    inside Arrow batches.  Scale shape: one narrow MapInPandas over the
+    corpus scan — no shuffle, no driver round-trip, vocabulary ships
+    once per executor as a broadcast."""
     import hashlib
     import re
 
@@ -529,26 +477,6 @@ def t18_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distributed_bpe_train(docs, N_TRAIN_MERGES, word_partitions=4)
 
 
-def bpe_tokenize_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc true-BPE stats: merged token count, pre-token (word)
-    count, merged-tokens-per-word, and the md5 of the merged encoding —
-    the digest gates the ENTIRE tokenization byte-exactly, not just the
-    count."""
-    n_words = F.size(F.regexp_extract_all(_clean_col(text_col), F.lit(BPE_PATTERN), 0))
-    enc = merged_encoding_col(text_col)
-    n_sep = F.length(enc) - F.length(F.replace(enc, F.lit(SEP), F.lit("")))
-    n_tok = (n_sep / 2).cast("int")
-    return docs.select(
-        "doc_id",
-        n_tok.alias("n_bpe_tokens"),
-        n_words.cast("int").alias("n_words"),
-        F.when(n_words > 0, n_tok.cast("double") / n_words)
-        .otherwise(0.0)
-        .alias("tokens_per_word"),
-        F.md5(enc).alias("tok_digest"),
-    )
-
-
 def _encoding_ctes_sql() -> tuple[str, str]:
     """(CTE chain applying the full merge table in _STAGE-sized
     materialized steps, name of the final CTE). The final CTE has
@@ -591,8 +519,8 @@ def _t13_oracle_sql() -> str:
 def t13_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gated on the PRODUCTION path (broadcast ranks + mapInPandas) so
     the driver exercises the code a 50k-merge deployment runs; the
-    oracle replays the chained-replace form in DuckDB, and the two
-    Spark modes are property-tested byte-identical (tests/test_bpe.py).
+    oracle replays the sequential-replace form in DuckDB, and
+    tests/test_bpe.py pins this path to the classic priority loop.
     """
     return bpe_tokenize_stats_production(load_table(spark, sf_dir, "documents"))
 

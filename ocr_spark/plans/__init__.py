@@ -39,92 +39,6 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver's correctness gate samples the FIRST 50 entries of
-# ``queries()`` (observed: each CORRECTNESS_r*.json holds exactly the
-# first 50 registration-order keys).  Entries listed here are moved to
-# the front after registration; entries beyond the cap keep their pytest
-# DuckDB gate (tests/test_catalog_oracle.py) and a local driver-format
-# row in CORRECTNESS_local.json.
-#
-# Round-6 rotation (no green row may age past two rounds): the 4 entries
-# whose implementation changed this round, the 5 whose latest green row
-# is r03, then 41 of the 43 other entries whose latest green row is r04
-# (4 + 5 + 41 = 50).  Entries green at r05 stay outside.  Left for the
-# next rotation, first: q13_distinct_agg and q14_rollup (green r01, r02
-# and r04) and q21_approx_sketches (rows-only by design, so a driver row
-# checks only its row count).
-DRIVER_PRIORITY: list[str] = [
-    # -- changed this round (must re-gate) ------------------------------------
-    "x09_lineage_metrics",     # shared commit protocol + scratch dir
-    "p06_shard_writer",        # shared commit protocol + scratch dir
-    "s04_stream_milestones",   # scratch dir
-    "s05_stream_extract",      # scratch dir
-    # -- latest green row r03 -------------------------------------------------
-    "x04_multimodal_features",
-    "x05_frame_sample",
-    "x06_audio_windows",
-    "x07_pandas_udaf",
-    "x08_warc_parse",
-    # -- latest green row r04 -------------------------------------------------
-    "d02_ngram_jaccard",
-    "d08_incremental_dedup",
-    "d11_bloom_membership",
-    "d12_substring_dedup",
-    "d13_benchmark_decontam",
-    "e03_centroid_assign",
-    "e05_kmeans",
-    "p01_chunking",
-    "p02_sequence_pack",
-    "p04_domain_mix",
-    "p05_curation_funnel",
-    "q04_order_priority",
-    "q11_set_ops",
-    "q12_semi_anti_join",
-    "q15_scalar_funcs",
-    "q16_date_json_funcs",
-    "q17_conditional_pivot",
-    "q18_stats_agg",
-    "q20_asof_join",
-    "q22_cube",
-    "q23_percentiles",
-    "q24_correlated_subquery",
-    "q25_range_frame",
-    "q26_hash_split",
-    "q27_gap_fill",
-    "q28_range_join",
-    "q29_stratified_sample",
-    "q30_full_outer",
-    "q31_latest_per_key",
-    "q32_rank_family",
-    "q33_multiset_ops",
-    "t02_quality_score",
-    "t03_lang_guess",
-    "t04_fingerprint",
-    "t06_langid_ngram",
-    "t07_pii_redact",
-    "t08_vocab_topk",
-    "t11_bpe_token_count",
-    "t16_quality_classifier",
-    "w01_wavefront_editdist",
-    "w02_tiled_cholesky",
-]
-
-
-def _reorder() -> None:
-    """Rebuild QUERIES/ORACLE in DRIVER_PRIORITY-first order (in place —
-    callers hold references to these dicts)."""
-    rank = {name: i for i, name in enumerate(DRIVER_PRIORITY)}
-    q = dict(QUERIES)
-    o = dict(ORACLE)
-    order = sorted(q, key=lambda n: (rank.get(n, len(rank)),))
-    QUERIES.clear()
-    ORACLE.clear()
-    for n in order:
-        QUERIES[n] = q[n]
-        if n in o:
-            ORACLE[n] = o[n]
-
-
 def load_all() -> None:
     """Import every module that registers catalog queries."""
     from ocr_spark.plans import relational  # noqa: F401
@@ -140,5 +54,3 @@ def load_all() -> None:
     from ocr_spark.operators import tiled_cholesky  # noqa: F401
     from ocr_spark.extract import catalog  # noqa: F401
     from ocr_spark.streaming import catalog as streaming_catalog  # noqa: F401
-
-    _reorder()

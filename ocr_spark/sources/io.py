@@ -100,11 +100,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_pages(spark: SparkSession, path: str, table: str | None = None) -> DataFrame:
     """Read the pages table — Iceberg table if a catalog is wired, else Parquet path."""
     if table and _iceberg_available(spark):

@@ -1,9 +1,10 @@
 """t13 true-BPE property tests.
 
-Pins the operator's sequential-replace formulation (apply each merge
-once, in rank order, as a replace-all over the sentinel encoding) to the
-classic GPT-2 ``bpe()`` priority loop on TRAINED merge tables — the
-equivalence the ``bpe.py`` module docstring argues. Merge tables are
+Pins the DuckDB oracle's sequential-replace formulation (apply each
+merge once, in rank order, as a replace-all over the sentinel encoding)
+to the classic GPT-2 ``bpe()`` priority loop on TRAINED merge tables —
+the equivalence the ``bpe.py`` module docstring argues — and the Spark
+mapInPandas encoder to the same classic loop. Merge tables are
 always produced by ``train_bpe_merges`` (the equivalence only holds for
 training-derived tables, where a merged symbol cannot exist before its
 creating merge).
@@ -15,6 +16,7 @@ oracle in test_catalog_oracle.py (t13 row) the reference never had.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from hypothesis import given, settings
@@ -32,15 +34,15 @@ from ocr_spark.operators.textstats import BPE_PATTERN
 
 
 def _encode_word(word: str) -> str:
-    """Python mirror of _encode_col for a single word: every char owns
-    both its separators."""
+    """Python mirror of the oracle's sentinel encoding (``_encode_sql``)
+    for a single word: every char owns both its separators."""
     return "".join(f"{SEP}{c}{SEP}" for c in word)
 
 
 def _sequential_replace(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Python mirror of merged_encoding_col restricted to one word:
-    left-to-right replace-all per merge, in rank order — exactly what
-    F.replace / DuckDB replace do."""
+    """Python mirror of the oracle's merge chain (``_merge_replace_sql``)
+    restricted to one word: left-to-right replace-all per merge, in rank
+    order — exactly what DuckDB replace does."""
     enc = _encode_word(word)
     for a, b in merges:
         enc = enc.replace(f"{SEP}{a}{SEP}{SEP}{b}{SEP}", f"{SEP}{a}{b}{SEP}")
@@ -90,41 +92,41 @@ def test_shipped_merges_actually_merge():
     assert len(classic_bpe_encode(w)) < len(w)
 
 
+_CORPUS = [
+    "the quick brown fox",
+    "aaaa bbbb the the the",
+    f"sentinel{SEP}chars{WB}stripped the dog",
+    "tokenize the documents and pack the tokens",
+    "",
+]
+
+
+def _classic(text: str) -> tuple[list[list[str]], str]:
+    """(per-word classic-loop tokens, md5 of their sentinel encoding)."""
+    clean = text.replace(SEP, "").replace(WB, "")
+    words = [classic_bpe_encode(w) for w in re.findall(BPE_PATTERN, clean)]
+    enc = WB.join("".join(f"{SEP}{tok}{SEP}" for tok in w) for w in words)
+    return words, hashlib.md5(enc.encode("utf-8")).hexdigest()
+
+
+def _corpus_df(spark):
+    return spark.createDataFrame(list(enumerate(_CORPUS)), "doc_id long, text string")
+
+
 def test_spark_expression_matches_classic(spark):
-    """The JVM column expression itself (not just its Python mirror)
-    reproduces the classic loop on a corpus with sentinel chars, runs of
-    repeats, and multi-word docs."""
-    from pyspark.sql import functions as F
+    """The Spark encoder's per-doc stats (token and word counts, ratio,
+    tok_digest) equal the classic loop on a corpus with sentinel chars,
+    runs of repeats, multi-word docs and an empty doc."""
+    from ocr_spark.operators.bpe import bpe_tokenize_stats_production
 
-    from ocr_spark.operators.bpe import bpe_token_count_col, merged_encoding_col
-
-    texts = [
-        "the quick brown fox",
-        "aaaa bbbb the the the",
-        f"sentinel{SEP}chars{WB}stripped the dog",
-        "tokenize the documents and pack the tokens",
-        "",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
-    rows = {
-        r["i"]: (r["enc"], r["n"])
-        for r in df.select(
-            "i",
-            merged_encoding_col("text").alias("enc"),
-            bpe_token_count_col("text").alias("n"),
-        ).collect()
-    }
-    for i, t in enumerate(texts):
-        clean = t.replace(SEP, "").replace(WB, "")
-        expect_tokens = [
-            tok for w in re.findall(BPE_PATTERN, clean) for tok in classic_bpe_encode(w)
-        ]
-        expect_enc = WB.join(
-            "".join(f"{SEP}{tok}{SEP}" for tok in classic_bpe_encode(w))
-            for w in re.findall(BPE_PATTERN, clean)
-        )
-        assert rows[i][0] == expect_enc, (i, t)
-        assert rows[i][1] == len(expect_tokens), (i, t)
+    rows = {r.doc_id: r for r in bpe_tokenize_stats_production(_corpus_df(spark)).collect()}
+    for i, t in enumerate(_CORPUS):
+        words, digest = _classic(t)
+        n_tok = sum(len(w) for w in words)
+        assert rows[i].n_bpe_tokens == n_tok, (i, t)
+        assert rows[i].n_words == len(words), (i, t)
+        assert rows[i].tokens_per_word == (n_tok / len(words) if words else 0.0), (i, t)
+        assert rows[i].tok_digest == digest, (i, t)
 
 
 def test_production_word_loop_equals_classic():
@@ -143,58 +145,20 @@ def test_production_word_loop_equals_classic():
             assert _bpe_word(w, r2) == classic_bpe_encode(w, merges), w
 
 
-def test_production_mode_matches_chained_replace(spark, sf_dir):
-    """The gated production path (broadcast ranks + mapInPandas) is
-    byte-identical to the chained-replace oracle-replay mode over the
-    real documents table — full 5-column frame including tok_digest."""
-    from ocr_spark.operators.bpe import (
-        bpe_tokenize_stats,
-        bpe_tokenize_stats_production,
-    )
-    from ocr_spark.sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    prod = {
-        r.doc_id: (r.n_bpe_tokens, r.n_words, r.tokens_per_word, r.tok_digest)
-        for r in bpe_tokenize_stats_production(docs).collect()
-    }
-    replay = {
-        r.doc_id: (r.n_bpe_tokens, r.n_words, r.tokens_per_word, r.tok_digest)
-        for r in bpe_tokenize_stats(docs).collect()
-    }
-    assert prod == replay
-    assert len(prod) > 0
-
-
 def test_production_token_arrays_match_expression(spark):
-    """bpe_token_arrays_production == the JVM bpe_token_array_col on a
-    corpus with sentinels, empties, and repeats."""
-    from ocr_spark.operators.bpe import (
-        bpe_token_array_col,
-        bpe_token_arrays_production,
-    )
+    """bpe_token_arrays_production gives the classic loop's flat token
+    array per doc on the same corpus."""
+    from ocr_spark.operators.bpe import bpe_token_arrays_production
 
-    texts = [
-        "the quick brown fox",
-        "aaaa bbbb the the the",
-        f"sentinel{SEP}chars{WB}stripped the dog",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {r.doc_id: r.ts for r in bpe_token_arrays_production(df).collect()}
-    want = {
-        r.doc_id: r.ts
-        for r in df.select("doc_id", bpe_token_array_col("text").alias("ts")).collect()
-    }
+    got = {r.doc_id: r.ts for r in bpe_token_arrays_production(_corpus_df(spark)).collect()}
+    want = {i: [tok for w in _classic(t)[0] for tok in w] for i, t in enumerate(_CORPUS)}
     assert got == want
 
 
 def test_production_scales_past_demo_vocab(spark):
-    """At >=1k merges — where the chained-replace expression tree is
-    infeasible (analyzer depth/cost grows with vocabulary) — the
-    production path still runs and matches the classic loop."""
+    """At >=1k merges — where a chained-replace expression tree cannot
+    be planned (BENCH/BPE_SCALE.md) — the production path still runs and
+    matches the classic loop."""
     from ocr_spark.operators.bpe import bpe_tokenize_stats_production
 
     corpus = [" ".join(ln.split()) for ln in SEED_CORPUS if ln.strip()]

@@ -1,12 +1,14 @@
 """Settings kept in one place: the session conf both entry points apply,
-and the driver-gate rotation list within the gate's 50-entry cap."""
+and the driver-gate order derived from the CORRECTNESS_r*.json rows."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
-from ocr_spark.plans import DRIVER_PRIORITY, QUERIES, load_all
+import __spark_entry__ as entrymod
+from ocr_spark.plans import QUERIES
 from ocr_spark.session import CONF
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,9 +34,19 @@ def test_spark_submit_session_applies_session_conf(spark):
             spark.conf.set(key, value)
 
 
-def test_driver_priority_fits_the_gate():
-    load_all()
-    assert len(DRIVER_PRIORITY) <= GATE_CAP
-    assert len(set(DRIVER_PRIORITY)) == len(DRIVER_PRIORITY)
-    assert set(DRIVER_PRIORITY) <= set(QUERIES)
-    assert list(QUERIES)[: len(DRIVER_PRIORITY)] == DRIVER_PRIORITY
+def test_gate_order_is_derived_from_correctness_rows():
+    order = list(entrymod.queries())
+    assert sorted(order) == sorted(QUERIES)
+    latest = entrymod.latest_green()
+    rounds = [latest.get(n, 0) for n in order]
+    assert rounds == sorted(rounds)
+
+    with open(os.path.join(REPO, "CORRECTNESS_r05.json")) as fh:
+        r05 = json.load(fh)
+    not_green_r05 = {n for n in QUERIES if n not in r05 or not entrymod._green(r05[n])}
+    assert set(order[:GATE_CAP]) == not_green_r05
+    assert {n[:3] for n in order[:5]} == {"x04", "x05", "x06", "x07", "x08"}
+
+    assert entrymod.gate_order([*order, "z99_never_gated"])[0] == "z99_never_gated"
+    oracle_order = list(entrymod.oracle_sql())
+    assert oracle_order == [n for n in order if n in oracle_order]

@@ -1,6 +1,5 @@
 """Production-vocab BPE scale probe (VERDICT r04 punch item #2 'Done'
-criterion): a bench row at >=1k merges, where the chained-replace mode
-is infeasible, proving the mapInPandas path is the production shape.
+criterion): a bench row at >=1k merges for the mapInPandas encoder.
 
 The driver-generated documents tables carry only 31 distinct pre-tokens
 (their trainable-vocabulary ceiling is ~107 merges — measured), so the
@@ -8,14 +7,9 @@ probe synthesises a deterministic rich corpus: seeded syllable
 pseudo-words (~3,000 distinct), 2,000 docs x 300 words. Then:
 
   1. train a 1,024-merge table on that corpus (classic trainer);
-  2. time the PRODUCTION path (broadcast ranks + mapInPandas) over the
-     corpus, min-of-3, and cross-check 20 sampled docs against the
-     classic GPT-2 loop;
-  3. time the CHAINED-REPLACE path at the same vocabulary in a
-     subprocess with a hard timeout — at 1,024 merges every document
-     pays 1,024 full string passes over its ~6x sentinel encoding, so
-     it either times out or posts a wall that makes the asymptotic
-     point on its own.
+  2. time the mapInPandas encoder (broadcast ranks) over the corpus,
+     min-of-3, and cross-check 20 sampled docs against the classic
+     GPT-2 loop.
 
 Writes BENCH/BPE_SCALE.md + prints one JSON line.
 
@@ -27,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import random
-import subprocess
 import sys
 import time
 
@@ -38,23 +31,6 @@ N_MERGES_BIG = 1024
 N_DOCS = 2000
 WORDS_PER_DOC = 300
 N_VOCAB = 3000
-CHAINED_TIMEOUT_S = 300
-
-_CHAINED_SCRIPT = r"""
-import sys, time, json
-sys.path.insert(0, {repo!r})
-from ocr_spark.operators import bpe
-from ocr_spark.session import build_session
-merges = json.load(open({merges_path!r}))
-bpe.MERGES = [tuple(m) for m in merges]
-spark = build_session("bpe-chained-probe", cores=int({cores}))
-from ocr_spark.operators.bpe import bpe_tokenize_stats
-docs = spark.read.parquet({corpus_path!r})
-t0 = time.perf_counter()
-n = bpe_tokenize_stats(docs).count()
-print("CHAINED", json.dumps({{"wall_s": round(time.perf_counter() - t0, 2), "rows": n}}))
-spark.stop()
-"""
 
 
 def synth_corpus() -> list[str]:
@@ -82,11 +58,7 @@ def main() -> int:
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     texts = synth_corpus()
 
-    from ocr_spark.operators.bpe import (
-        _bpe_word,
-        classic_bpe_encode,
-        train_bpe_merges,
-    )
+    from ocr_spark.operators.bpe import classic_bpe_encode, train_bpe_merges
 
     t0 = time.perf_counter()
     big = train_bpe_merges(texts[:200], n_merges=N_MERGES_BIG)
@@ -129,44 +101,6 @@ def main() -> int:
         assert got[i] == want, (i, got[i], want)
     spark.stop()
 
-    merges_path = os.path.join(REPO, "build", "bpe_merges_1024.json")
-    os.makedirs(os.path.dirname(merges_path), exist_ok=True)
-    with open(merges_path, "w") as fh:
-        json.dump(big, fh)
-    chained: dict = {"status": "not_run"}
-    script = _CHAINED_SCRIPT.format(
-        repo=REPO, merges_path=merges_path, cores=cores, corpus_path=corpus_path
-    )
-    t0 = time.perf_counter()
-    try:
-        p = subprocess.run(
-            [sys.executable, "-c", script],
-            capture_output=True,
-            text=True,
-            timeout=CHAINED_TIMEOUT_S,
-        )
-        line = next(
-            (ln for ln in p.stdout.splitlines() if ln.startswith("CHAINED")), None
-        )
-        if line:
-            chained = json.loads(line.split(" ", 1)[1])
-            chained["status"] = "completed"
-        elif "StackOverflowError" in p.stderr:
-            chained = {
-                "status": "infeasible",
-                "error": "java.lang.StackOverflowError in Catalyst column-"
-                "expression conversion at 1024 nested replace() calls — "
-                "the chained-replace mode cannot even BUILD its plan at "
-                "production vocabulary size",
-            }
-        else:
-            chained = {"status": "failed", "stderr_tail": p.stderr[-500:]}
-    except subprocess.TimeoutExpired:
-        chained = {
-            "status": f"timeout>{CHAINED_TIMEOUT_S}s",
-            "wall_s_elapsed": round(time.perf_counter() - t0, 1),
-        }
-
     out = {
         "metric": "bpe_1024_merge_tokenize",
         "n_merges": len(big),
@@ -176,7 +110,6 @@ def main() -> int:
         "distinct_vocab": N_VOCAB,
         "production_wall_s": round(prod_best, 2),
         "production_docs_per_s": round(n_docs / prod_best, 1),
-        "chained_replace": chained,
         "cores": cores,
         "classic_loop_spot_check": "passed (20 sampled docs)",
     }
