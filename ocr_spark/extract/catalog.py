@@ -280,10 +280,11 @@ def x08_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _x09_oracle() -> str:
     """Generator-side truth for the committed-run report: per-size-class
     document counts (size class = clamped ceil-log2 of html bytes, the
-    partitioning module's exact formula with its n_salt=8 default ->
-    class = partition_id // 8), plus the resume-no-op flag.  Derived
-    purely from the fixture corpus — independent of Spark."""
-    from ocr_spark.operators.partitioning import DEFAULT_SALT, MAX_LOG2, MIN_LOG2  # noqa: F401
+    partitioning module's exact formula, which the Spark side recovers
+    from partition_id via bucket_size_class), plus the resume-no-op
+    flag.  Derived purely from the fixture corpus — independent of
+    Spark."""
+    from ocr_spark.operators.partitioning import MAX_LOG2, MIN_LOG2
 
     hist: dict[int, int] = {}
     for r in _corpus().itertuples():
@@ -318,14 +319,12 @@ def x09_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_extraction(spark, pages, out, run_id="gate")
     third = run_extraction(spark, pages, out, run_id="gate")
     noop = third["buckets_processed"] == 0
-    from ocr_spark.operators.partitioning import DEFAULT_SALT
+    from ocr_spark.operators.partitioning import bucket_size_class
 
     m = read_metrics(spark, out)
     return (
         m.filter(F.col("run_id") == "gate")
-        .groupBy(
-            (F.col("partition_id") / DEFAULT_SALT).cast("int").alias("size_class")
-        )
+        .groupBy(bucket_size_class(F.col("partition_id")).alias("size_class"))
         .agg(F.sum("input_count").cast("int").alias("n_docs"))
         .select(
             "size_class", "n_docs", F.lit(bool(noop)).alias("resume_noop")

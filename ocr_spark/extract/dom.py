@@ -190,6 +190,7 @@ from html import unescape as _unescape
 _TAGFIND_TOL = getattr(_hp, "tagfind_tolerant", None)
 _LOCATESTART = getattr(_hp, "locatestarttagend_tolerant", None)
 _ENDTAGFIND = getattr(_hp, "endtagfind", None)
+_ATTRFIND = getattr(_hp, "attrfind_tolerant", None)
 
 # Fused start-tag regex: _LOCATESTART with a capture group wrapped
 # around its (textually identical) tag-name token, so one match yields
@@ -226,7 +227,7 @@ def _probe_stdlib_cdata() -> bool:
 
 
 _FAST_PATH_OK = (
-    all(r is not None for r in (_TAGFIND_TOL, _LOCATESTART, _ENDTAGFIND))
+    all(r is not None for r in (_TAGFIND_TOL, _LOCATESTART, _ENDTAGFIND, _ATTRFIND))
     and _probe_stdlib_cdata()
 )
 _COMMENTCLOSE = re.compile(r"--\s*>")
@@ -237,6 +238,20 @@ _COMMENTCLOSE = re.compile(r"--\s*>")
 _DISPATCH_TAGS = _SKIP_TAGS | _BLOCK_TAGS | {"a", "body"}
 _ATTR_END_LETTERS = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ASCII_LETTERS = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
+
+
+def _starttag_end(html: str, i: int, endpos: int) -> str:
+    """The terminator stdlib parse_starttag sees for the whole start tag
+    html[i:endpos]: what its attribute loop leaves, stripped. A bare
+    attribute value runs up to '>', so in `<a href=x/>` the '/' is part
+    of the value and the tag opens rather than self-closes."""
+    k = _TAGFIND_TOL.match(html, i + 1).end()
+    while k < endpos:
+        m = _ATTRFIND.match(html, k)
+        if not m:
+            break
+        k = m.end()
+    return html[k:endpos].strip()
 
 
 class _NeedsStdlib(Exception):
@@ -327,8 +342,16 @@ def _scan_tokens(html: str, h: _BlockParser) -> None:
                 tag = _TAGFIND_TOL.match(html, i + 1).group(1).lower()
             # stdlib re-derives the '>' / '/>' terminator through the attr
             # loop; _LOCATESTART already consumed the attrs, so the
-            # terminator is endpos[-1] ('>') or '/>'.
-            if html[endpos - 2 : endpos] == "/>":
+            # terminator is endpos[-1] ('>') or '/>' — unless a bare
+            # attribute value ('=' needed) swallowed the '/'.
+            end = html[endpos - 2 : endpos]
+            if end == "/>" and "=" in html[i:endpos]:
+                end = _starttag_end(html, i, endpos)
+                if end not in (">", "/>"):
+                    h.handle_data(html[i:endpos])
+                    i = endpos
+                    continue
+            if end == "/>":
                 if tag in _BLOCK_TAGS:  # handle_startendtag no-ops otherwise
                     h.handle_startendtag(tag, [])
             else:

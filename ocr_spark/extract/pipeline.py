@@ -2,10 +2,16 @@
 
 Plan shape (one wide exchange total, per SURVEY.md §4.3):
 
-  scan pages (column-pruned: url, html, text, lang [, bucket])
+  scan pages (column-pruned: url, html, text)
     -> salted size-bucket repartition           (the one shuffle)
     -> mapInPandas EXTRACT                      (Arrow-batched Python)
     -> sink / golden-diff
+
+The first two steps are operators.partitioning.size_bucket_repartition,
+the one extraction plan: extract_pages, the committed run
+(operators.lineage.run_extraction, which tools/extract_job.py submits)
+and the streaming twin all call it, so every path shuffles the same way
+and a bucket id never depends on the cluster it ran on.
 
 The EXTRACT stage is the EDT of the system (reference task execute:
 `/root/reference/src/task/hc/hc-task.c:337-419` — acquire input buffers,
@@ -31,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ocr_spark.extract import boilerplate, dom, normalize, pdfbranch
-from ocr_spark.operators.partitioning import size_bucket_repartition, with_size_buckets
+from ocr_spark.operators.partitioning import size_bucket_repartition
 
 EXTRACT_DDL = (
     "url string, extracted_text binary, n_blocks_kept int, "
@@ -65,7 +71,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             "n_blocks_kept": [0] * n,
             "branch": ["empty"] * n,
             "error": [None] * n,
-            "bucket": (pdf["bucket"] if "bucket" in pdf else pd.Series([-1] * n)).tolist(),
+            "bucket": pdf["bucket"].tolist(),
             "proc_us": [0] * n,
         }
         htmls = pdf["html"].tolist()
@@ -84,31 +90,12 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-def extract_pages(
-    pages: DataFrame,
-    repartition: bool = True,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def extract_pages(pages: DataFrame) -> DataFrame:
     """pages (url, html, text[, lang]) -> extracted rows.
 
-    Column pruning is explicit: only url/html/text (+bucket) cross into
+    Column pruning is explicit: only url/html/text + bucket cross into
     Python — warc_ts/lang never pay the Arrow transfer.
     """
-    cols = pages.select("url", "html", "text")
-    if repartition:
-        if num_partitions is None:
-            # Pin the exchange width: an unspecified repartition("bucket")
-            # is AQE-coalescible, and AQE sizes partitions by BYTES —
-            # right for shuffles, wrong for a CPU-bound Python stage
-            # where 50 MB of html is minutes of parse work (observed:
-            # 16k-doc bench coalesced to 8 tasks on 32 cores, a 4x
-            # throughput loss with a straggler tail). Several tasks per
-            # core keeps every worker busy and bounds the tail; cluster
-            # jobs pass an explicit count (extract_job.py does).
-            num_partitions = pages.sparkSession.sparkContext.defaultParallelism * 3
-        bucketed = size_bucket_repartition(
-            cols, num_partitions=num_partitions
-        )
-    else:
-        bucketed = with_size_buckets(cols)
-    return bucketed.mapInPandas(_extract_batches, schema=EXTRACT_DDL)
+    return size_bucket_repartition(pages).mapInPandas(
+        _extract_batches, schema=EXTRACT_DDL
+    )

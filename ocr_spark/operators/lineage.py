@@ -6,7 +6,8 @@ The Spark re-expression of three reference mechanisms (SURVEY.md §1.3):
   - IDEM event "first satisfy wins" (`src/event/hc/hc-event.c:202-208`)
     -> write-once commit markers keyed (run_id, partition_id);
   - finish-latch countdown (`src/event/hc/hc-event.c:223-259`)
-    -> run complete ⇔ metrics rows == bucket count.
+    -> run complete ⇔ every size class has a marker per bucket
+       (run_rollup_complete).
 
 The write-data-then-marker protocol (committed markers -> todo buckets
 -> dynamic-overwrite data write -> read-back -> IDEM markers) is
@@ -24,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.extract.pipeline import _extract_batches, EXTRACT_DDL
 from ocr_spark.operators.commit import commit_run, committed_keys, read_markers
-from ocr_spark.operators.partitioning import size_bucket_repartition
+from ocr_spark.operators.partitioning import bucket_size_class, size_bucket_repartition
 
 
 def _metrics_path(out_dir: str) -> str:
@@ -55,7 +56,6 @@ def run_extraction(
     run_id: str,
     max_buckets: int | None = None,
     validate: bool = False,
-    n_salt: int | None = None,
 ) -> dict:
     """Execute (or resume) one extraction run. ``max_buckets`` processes
     only the first K uncommitted buckets — the test hook that simulates a
@@ -63,12 +63,10 @@ def run_extraction(
     if validate:
         assert_unique_urls(pages)
 
-    # bucket count = restart granularity AND max parallelism of the run;
-    # pass n_salt ~ executor-cores x 4 on a cluster (default 8 keeps small
-    # test corpora at a handful of buckets per size class)
-    bucketed = size_bucket_repartition(
-        pages.select("url", "html", "text"), n_salt=n_salt
-    )
+    # bucket = restart granularity AND max parallelism of the run; it
+    # depends on (url, html bytes) only, so a resume at another core
+    # count finds every committed url in the bucket its marker names
+    bucketed = size_bucket_repartition(pages)
 
     n_buckets, n_rows = commit_run(
         spark,
@@ -93,19 +91,8 @@ def _bucket_metrics(written: DataFrame) -> DataFrame:
     )
 
 
-def run_complete(spark: SparkSession, out_dir: str, run_id: str, n_buckets: int) -> bool:
-    """Latch semantics: the run is complete when the marker count reaches
-    the bucket count."""
-    committed = committed_keys(spark, _metrics_path(out_dir), run_id, "partition_id")
-    return committed is not None and committed.count() == n_buckets
-
-
 def size_class_latches(
-    spark: SparkSession,
-    out_dir: str,
-    run_id: str,
-    bucketed: DataFrame,
-    n_salt: int | None = None,
+    spark: SparkSession, out_dir: str, run_id: str, pages: DataFrame
 ) -> DataFrame:
     """Nested finish scopes: one latch per size class, rolled up from the
     bucket-grain markers — the reference's finish-EDTs nest, with a
@@ -113,9 +100,9 @@ def size_class_latches(
     (`/root/reference/src/task/hc/hc-task.c:169-215`); round 1 had only
     the flat run-level latch.
 
-    bucket = size_class * n_salt + salt (operators.partitioning), so the
-    class scope is bucket div n_salt. Returns one row per size class
-    present in the input: (size_class, n_expected, n_committed,
+    ``pages`` are bucketed by the run's own plan and each bucket's class
+    scope is partitioning.bucket_size_class. Returns one row per size
+    class present in the input: (size_class, n_expected, n_committed,
     complete) — the run-level latch is the conjunction, which
     run_rollup_complete() evaluates in the same single plan.
 
@@ -124,29 +111,20 @@ def size_class_latches(
     last), and a monitoring layer alerts on a class that stalls while
     others drain.
     """
-    from ocr_spark.operators.partitioning import DEFAULT_SALT
-
-    n_salt = n_salt or DEFAULT_SALT
     expected = (
-        bucketed.select("bucket")
+        size_bucket_repartition(pages)
+        .select("bucket")
         .distinct()
-        .select(
-            (F.col("bucket") / n_salt).cast("int").alias("size_class"), "bucket"
-        )
-        .groupBy("size_class")
+        .groupBy(bucket_size_class(F.col("bucket")).alias("size_class"))
         .agg(F.count(F.lit(1)).alias("n_expected"))
     )
     committed = committed_keys(spark, _metrics_path(out_dir), run_id, "partition_id")
     if committed is None:
         committed = spark.createDataFrame([], "size_class int, n_committed long")
     else:
-        committed = (
-            committed.select(
-                (F.col("partition_id") / n_salt).cast("int").alias("size_class")
-            )
-            .groupBy("size_class")
-            .agg(F.count(F.lit(1)).alias("n_committed"))
-        )
+        committed = committed.groupBy(
+            bucket_size_class(F.col("partition_id")).alias("size_class")
+        ).agg(F.count(F.lit(1)).alias("n_committed"))
     return (
         expected.join(committed, "size_class", "left")
         .select(
@@ -162,12 +140,8 @@ def size_class_latches(
 
 
 def run_rollup_complete(
-    spark: SparkSession,
-    out_dir: str,
-    run_id: str,
-    bucketed: DataFrame,
-    n_salt: int | None = None,
+    spark: SparkSession, out_dir: str, run_id: str, pages: DataFrame
 ) -> bool:
     """Run-level finish = every size-class latch closed (one plan)."""
-    latches = size_class_latches(spark, out_dir, run_id, bucketed, n_salt)
+    latches = size_class_latches(spark, out_dir, run_id, pages)
     return latches.agg(F.min(F.col("complete").cast("int"))).collect()[0][0] == 1

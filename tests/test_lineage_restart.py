@@ -10,12 +10,11 @@ from pyspark.sql import functions as F
 from ocr_spark.fixtures import golden_df, pages_df
 from ocr_spark.operators.lineage import (
     read_metrics,
-    run_complete,
     run_extraction,
     run_rollup_complete,
     size_class_latches,
 )
-from ocr_spark.operators.partitioning import with_size_buckets
+from ocr_spark.operators.partitioning import size_bucket_repartition
 
 N_DOCS = 300
 K = 5
@@ -31,12 +30,7 @@ def pages(spark):
 
 def test_kill_resume(spark, pages, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("lineage_run"))
-    n_buckets = (
-        with_size_buckets(pages.select("url", "html", "text"))
-        .select("bucket")
-        .distinct()
-        .count()
-    )
+    n_buckets = size_bucket_repartition(pages).select("bucket").distinct().count()
     assert n_buckets > K
 
     # phase 1: "killed" after K bucket commits
@@ -47,12 +41,12 @@ def test_kill_resume(spark, pages, tmp_path_factory):
         (r.partition_id, r.checksum, r.input_count) for r in m1.collect()
     }
     assert len(committed1) == K
-    assert not run_complete(spark, out, "r1", n_buckets)
+    assert not run_rollup_complete(spark, out, "r1", pages)
 
     # phase 2: resume — must recompute exactly N-K buckets
     s2 = run_extraction(spark, pages, out, run_id="r1")
     assert s2["buckets_processed"] == n_buckets - K
-    assert run_complete(spark, out, "r1", n_buckets)
+    assert run_rollup_complete(spark, out, "r1", pages)
 
     m2 = read_metrics(spark, out).filter(F.col("run_id") == "r1")
     all_rows = {(r.partition_id, r.checksum, r.input_count) for r in m2.collect()}
@@ -81,19 +75,18 @@ def test_kill_resume(spark, pages, tmp_path_factory):
 def test_size_class_rollup(spark, pages, tmp_path_factory):
     """Nested finish scopes: after a partial run the per-class latches
     report mixed progress that sums to the flat view; after resume every
-    class latch closes and the roll-up agrees with run_complete."""
+    class latch closes and the committed count reaches the bucket count."""
     out = str(tmp_path_factory.mktemp("lineage_rollup"))
-    bucketed = with_size_buckets(pages.select("url", "html", "text"))
-    n_buckets = bucketed.select("bucket").distinct().count()
+    n_buckets = size_bucket_repartition(pages).select("bucket").distinct().count()
 
     run_extraction(spark, pages, out, run_id="r2", max_buckets=K)
-    latches = size_class_latches(spark, out, "r2", bucketed).collect()
+    latches = size_class_latches(spark, out, "r2", pages).collect()
     assert sum(r.n_expected for r in latches) == n_buckets
     assert sum(r.n_committed for r in latches) == K
-    assert not run_rollup_complete(spark, out, "r2", bucketed)
+    assert not run_rollup_complete(spark, out, "r2", pages)
 
     run_extraction(spark, pages, out, run_id="r2")
-    latches = size_class_latches(spark, out, "r2", bucketed).collect()
+    latches = size_class_latches(spark, out, "r2", pages).collect()
     assert all(r.complete for r in latches)
-    assert run_rollup_complete(spark, out, "r2", bucketed)
-    assert run_complete(spark, out, "r2", n_buckets)
+    assert sum(r.n_committed for r in latches) == n_buckets
+    assert run_rollup_complete(spark, out, "r2", pages)

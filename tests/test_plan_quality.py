@@ -5,8 +5,6 @@ the extraction pipeline, and no row-wise Python anywhere."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ocr_spark.plans import QUERIES, load_all
 
 load_all()
@@ -53,14 +51,41 @@ def test_q10_topk_avoids_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_extract_single_exchange(spark):
+def test_extract_single_exchange(spark, tmp_path, monkeypatch):
+    """extract_pages and the committed run's produce step plan the same
+    single exchange: the unpinned salted size-bucket repartition."""
+    import re
+
     from ocr_spark.extract.pipeline import extract_pages
     from ocr_spark.fixtures import pages_df
+    from ocr_spark.operators import lineage
 
-    plan = _plan(extract_pages(pages_df(spark, 20)))
+    pages = pages_df(spark, 20)
+    plan = _plan(extract_pages(pages))
     assert plan.count("Exchange") == 1  # the salted size-bucket shuffle only
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
+
+    produced = []
+
+    def fake_commit_run(spark, rows, produce, **kw):
+        produced.append(produce(rows))
+        return 0, 0
+
+    monkeypatch.setattr(lineage, "commit_run", fake_commit_run)
+    lineage.run_extraction(spark, pages, str(tmp_path), "plan")
+
+    def exchanges(plan):
+        return [
+            re.sub(r"#\d+|, \[plan_id=\d+\]", "", line.strip().lstrip("+- "))
+            for line in plan.splitlines()
+            if "Exchange" in line
+        ]
+
+    batch = exchanges(plan)
+    assert batch == exchanges(_plan(produced[0]))
+    assert batch[0].startswith("Exchange hashpartitioning(bucket,"), batch
+    assert "REPARTITION_BY_COL" in batch[0], batch
 
 
 def test_no_rowwise_python_in_catalog(spark, sf_dir):
@@ -129,23 +154,6 @@ def test_t08_vocab_has_partial_agg(spark, sf_dir):
     per-(lang,token) partials, never exploded token rows."""
     plan = _plan(QUERIES["t08_vocab_topk"](spark, sf_dir))
     assert "partial_count" in plan
-
-
-def test_size_bucket_repartition_fills_partitions(spark):
-    """Regression: with n_salt fixed at 8 the distinct-bucket count
-    (~occupied size classes x 8) capped effective parallelism at ~27
-    no matter how many partitions were requested. n_salt now scales
-    with num_partitions; a 64-way repartition of a mixed corpus must
-    fill most of its partitions."""
-    from ocr_spark.fixtures import pages_df
-    from ocr_spark.operators.partitioning import size_bucket_repartition
-
-    pages = pages_df(spark, 2000).select("url", "html", "text")
-    bucketed = size_bucket_repartition(pages, num_partitions=64)
-    nonempty = (
-        bucketed.groupBy(F.spark_partition_id().alias("pid")).count().count()
-    )
-    assert nonempty >= 48, f"only {nonempty}/64 partitions non-empty"
 
 
 def test_e03_e05_argmin_has_no_window_sort(spark, sf_dir):

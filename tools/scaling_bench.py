@@ -18,9 +18,12 @@ inflates ~1.4-3x, so 8->32 cannot evidence software scaling on this
 box. 4->16 sits inside the VM's linear region; per-task time there is
 flat, so the measured efficiency reflects the job, not the host.
 
-Each parallelism level runs `--trials` timed passes inside one JVM and
-reports the best (shared-host noise perturbs single shots by up to
-~30%; min-of-N is the standard denoiser and is applied to BOTH sizes).
+Each trial is one `tools/extract_job.py --run-dir` launch: a fresh,
+committed extraction run into a new run dir, timed by the job around
+its run_extraction call (so Python worker start-up is inside the wall).
+Each parallelism level runs `--trials` launches and reports the best
+(shared-host noise perturbs single shots by up to ~30%; min-of-N is the
+standard denoiser and is applied to BOTH sizes).
 
 Usage: python tools/scaling_bench.py [--docs 192000] [--small 4 --large 16]
 Writes BENCH/scaling.json and BENCH/BASELINE.md.
@@ -32,8 +35,10 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
+import tempfile
 import zipfile
 from datetime import datetime, timezone
 
@@ -75,35 +80,49 @@ def gen_corpus(docs: int, path: str) -> None:
     spark.stop()
 
 
-def run_once(
-    cores: int, corpus: str, zpath: str, out_json: str, partitions: int, trials: int
-) -> dict:
+def run_once(cores: int, corpus: str, zpath: str, out_json: str, trials: int) -> dict:
+    """``trials`` committed runs at local[cores], each into a fresh run
+    dir; the best and median walls go to ``out_json`` and are returned."""
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    cmd = [
-        spark_submit,
-        "--master", f"local[{cores}]",
-        "--conf", "spark.sql.shuffle.partitions=%d" % partitions,
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.driver.memory=8g",
-        "--conf", "spark.ui.enabled=false",
-        # Scan splits sized so the (memory-bandwidth-bound) parquet
-        # decode + shuffle-write stage has >= several tasks per core at
-        # BOTH parallelism levels; at 128 MB the ~200 MB corpus scans in
-        # too few tasks to occupy 16 cores. Cluster-scale analogue:
-        # splits per executor-core >= 4.
-        "--conf", "spark.sql.files.maxPartitionBytes=16m",
-        "--py-files", zpath,
-        os.path.join(REPO, "tools", "extract_job.py"),
-        "--input", corpus,
-        "--bench",
-        "--partitions", str(partitions),
-        "--trials", str(trials),
-        "--out", out_json,
-    ]
-    subprocess.run(cmd, check=True, cwd=REPO,
-                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
-    with open(out_json) as f:
-        return json.loads(f.read())
+    runs = []
+    for _ in range(max(1, trials)):
+        with tempfile.TemporaryDirectory() as tmp:
+            cmd = [
+                spark_submit,
+                "--master", f"local[{cores}]",
+                "--conf", "spark.driver.memory=8g",
+                "--conf", "spark.ui.enabled=false",
+                # Scan splits sized so the (memory-bandwidth-bound) parquet
+                # decode + shuffle-write stage has >= several tasks per core
+                # at BOTH parallelism levels; at 128 MB the ~200 MB corpus
+                # scans in too few tasks to occupy 16 cores. Cluster-scale
+                # analogue: splits per executor-core >= 4.
+                "--conf", "spark.sql.files.maxPartitionBytes=16m",
+                "--py-files", zpath,
+                os.path.join(REPO, "tools", "extract_job.py"),
+                "--input", corpus,
+                "--run-dir", os.path.join(tmp, "run"),
+                "--out", os.path.join(tmp, "result.json"),
+            ]
+            subprocess.run(cmd, check=True, cwd=REPO,
+                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+            with open(os.path.join(tmp, "result.json")) as f:
+                runs.append(json.loads(f.read()))
+    walls = [r["wall_s"] for r in runs]
+    docs = runs[0]["rows"]
+    wall, wall_med = min(walls), statistics.median(walls)
+    result = {
+        "cores": cores,
+        "docs": docs,
+        "wall_s": wall,
+        "wall_median_s": round(wall_med, 3),
+        "walls": walls,
+        "docs_per_sec": round(docs / wall, 2),
+        "docs_per_sec_median": round(docs / wall_med, 2),
+    }
+    with open(out_json, "w") as f:
+        json.dump(result, f)
+    return result
 
 
 def main() -> None:
@@ -111,7 +130,6 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=192000)
     ap.add_argument("--small", type=int, default=4)
     ap.add_argument("--large", type=int, default=16)
-    ap.add_argument("--partitions", type=int, default=256)
     ap.add_argument("--trials", type=int, default=3)
     ap.add_argument("--corpus", default="/tmp/ocr_spark_scaling_corpus")
     ap.add_argument("--sweep", action="store_true",
@@ -145,8 +163,7 @@ def main() -> None:
         print(f"spark-submit local[{cores}] ...", flush=True)
         results[cores] = run_once(
             cores, args.corpus, zpath,
-            os.path.join(bench_dir, f"extract_{cores}c.json"),
-            args.partitions, args.trials,
+            os.path.join(bench_dir, f"extract_{cores}c.json"), args.trials,
         )
         print(f"  local[{cores}]: {results[cores]['docs_per_sec']} docs/sec", flush=True)
 
@@ -154,11 +171,9 @@ def main() -> None:
     ratio = args.large / args.small
     eff = large["docs_per_sec"] / (ratio * small["docs_per_sec"])
     # median alongside min (VERDICT r02: min-of-N is the host-noise
-    # denoiser, but publish the median so warm-up outliers in the trial
-    # list are visible rather than silently dropped)
-    eff_median = large.get("docs_per_sec_median", 0) / (
-        ratio * small.get("docs_per_sec_median", 1)
-    )
+    # denoiser, but publish the median so outliers in the trial list
+    # are visible rather than silently dropped)
+    eff_median = large["docs_per_sec_median"] / (ratio * small["docs_per_sec_median"])
     summary = {
         "metric": "extract_scaling_efficiency",
         "value": round(eff, 3),
@@ -179,18 +194,19 @@ def main() -> None:
 North rule criterion: throughput scaling efficiency >= 0.8 between
 cluster sizes N and 4N. Sandbox evidence (no real cluster available):
 the identical `spark-submit --py-files build/ocr_spark.zip
-tools/extract_job.py --bench` job at two local parallelism levels over
-the same {small["docs"]}-doc deterministic synthetic corpus
-(ocr_spark.fixtures, seed 42; mixed html/pdf/text branches, skew tail of
-x200-size pages, {args.partitions} size-bucketed shuffle partitions).
+tools/extract_job.py --run-dir` job (one fresh committed extraction
+run) at two local parallelism levels over the same {small["docs"]}-doc
+deterministic synthetic corpus (ocr_spark.fixtures, seed 42; mixed
+html/pdf/text branches, skew tail of x200-size pages; buckets from the
+fixed salted size-bucket policy, independent of the core count).
 
 N = {args.small} / 4N = {args.large} cores (not 8/32): a pure-CPU
 multiprocessing probe with no Spark shows this shared-host VM's own
 8->32-proc efficiency is ~0.6 (per-task CPU time inflates above 16-way
 concurrency), so only the <=16-core region can evidence *software*
 scaling; {args.small}->{args.large} lies inside the VM's linear region.
-Each level ran {args.trials} timed passes in one JVM; best pass
-reported for both sizes (min-of-N denoising against host noise).
+Each level ran {args.trials} launches, each into a fresh run dir; best
+run reported for both sizes (min-of-N denoising against host noise).
 Input parquet is uncompressed (identical bytes at both sizes): with
 snappy the scan stage's decode is memory-bandwidth bound and its
 per-task cost inflates ~3x at 16-way concurrency on this VM,
@@ -198,8 +214,8 @@ understating pipeline scaling (0.80 with snappy on the same corpus).
 
 | cluster size | launch | docs | wall min (s) | wall median (s) | docs/sec (min) | docs/sec (median) |
 |---|---|---|---|---|---|---|
-| N = {args.small} cores | `spark-submit --master local[{args.small}]` | {small["docs"]} | {small["wall_s"]} | {small.get("wall_median_s", "-")} | {small["docs_per_sec"]} | {small.get("docs_per_sec_median", "-")} |
-| 4N = {args.large} cores | `spark-submit --master local[{args.large}]` | {large["docs"]} | {large["wall_s"]} | {large.get("wall_median_s", "-")} | {large["docs_per_sec"]} | {large.get("docs_per_sec_median", "-")} |
+| N = {args.small} cores | `spark-submit --master local[{args.small}]` | {small["docs"]} | {small["wall_s"]} | {small["wall_median_s"]} | {small["docs_per_sec"]} | {small["docs_per_sec_median"]} |
+| 4N = {args.large} cores | `spark-submit --master local[{args.large}]` | {large["docs"]} | {large["wall_s"]} | {large["wall_median_s"]} | {large["docs_per_sec"]} | {large["docs_per_sec_median"]} |
 
 **Scaling efficiency (min-of-{args.trials}) =
 {large["docs_per_sec"]} / ({ratio:.0f} x {small["docs_per_sec"]}) = {eff:.3f}**
@@ -207,9 +223,10 @@ understating pipeline scaling (0.80 with snappy on the same corpus).
 median-of-{args.trials} efficiency = {eff_median:.3f}.
 All raw trial walls are in BENCH/extract_{{N}}c.json `walls`.
 
-Measured {summary["generated_utc"]}; warm-up pass (python-worker spawn +
-JIT) excluded from the timed window on both sizes; input parquet
-generated once and shared byte-identical between the two runs.
+Measured {summary["generated_utc"]}; each wall is the job's own
+run_extraction call (scan, shuffle, python-worker spawn, extract,
+parquet write, marker read-back), JVM start excluded; input parquet
+generated once and shared byte-identical between the two sizes.
 
 Reproduce: `python tools/scaling_bench.py`
 """
@@ -245,13 +262,11 @@ def interleave(args) -> None:
     for r in range(args.interleave):
         rates = {}
         for cores in (args.small, args.large):
-            # min-of-trials INSIDE each launch: the steady-state wall a
-            # long-running job sees (JIT + workers warm after pass 1);
-            # pairing across sizes stays within the round's time window
+            # one launch per size per round: pairing across sizes stays
+            # within the round's time window
             out = run_once(
                 cores, args.corpus, zpath,
-                os.path.join("/tmp", f"interleave_{cores}c.json"),
-                args.partitions, trials=args.trials,
+                os.path.join("/tmp", f"interleave_{cores}c.json"), trials=1,
             )
             rates[cores] = out["docs_per_sec"]
             walls[cores].append(out["wall_s"])
@@ -268,8 +283,6 @@ def interleave(args) -> None:
             f"{args.large}c {walls[args.large][-1]}s, eff {eff_r:.3f}",
             flush=True,
         )
-
-    import statistics
 
     effs = sorted(r["efficiency"] for r in rounds)
     eff_median = statistics.median(effs)
@@ -310,7 +323,7 @@ def sweep(args) -> None:
     for cores in (1, 2, 4, 8, 16, 32):
         r = run_once(cores, args.corpus, zpath,
                      os.path.join(bench_dir, f"sweep_{cores}c.json"),
-                     args.partitions, max(2, args.trials - 1))
+                     max(2, args.trials - 1))
         rows.append(r)
         print(f"local[{cores}]: {r['docs_per_sec']} docs/sec", flush=True)
     base = rows[0]["docs_per_sec"]
