@@ -7,11 +7,12 @@ Plan shape (one wide exchange total, per SURVEY.md §4.3):
     -> mapInPandas EXTRACT                      (Arrow-batched Python)
     -> sink / golden-diff
 
-The first two steps are operators.partitioning.size_bucket_repartition,
-the one extraction plan: extract_pages, the committed run
-(operators.lineage.run_extraction, which tools/extract_job.py submits)
-and the streaming twin all call it, so every path shuffles the same way
-and a bucket id never depends on the cluster it ran on.
+The first step keeps EXTRACT_INPUT only; the second is
+operators.partitioning.size_bucket_repartition, the one extraction
+plan: extract_pages, the committed run (operators.lineage.run_extraction,
+which tools/extract_job.py submits) and the streaming twin all call it,
+so every path shuffles the same way and a bucket id never depends on
+the cluster it ran on.
 
 The EXTRACT stage is the EDT of the system (reference task execute:
 `/root/reference/src/task/hc/hc-task.c:337-419` — acquire input buffers,
@@ -39,6 +40,8 @@ from pyspark.sql import DataFrame
 from ocr_spark.extract import boilerplate, dom, normalize, pdfbranch
 from ocr_spark.operators.partitioning import size_bucket_repartition
 
+# the only columns that cross into the EXTRACT stage's Python worker
+EXTRACT_INPUT = ("url", "html", "text")
 EXTRACT_DDL = (
     "url string, extracted_text binary, n_blocks_kept int, "
     "branch string, error string, bucket int, proc_us long"
@@ -93,9 +96,9 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages (url, html, text[, lang]) -> extracted rows.
 
-    Column pruning is explicit: only url/html/text + bucket cross into
+    Column pruning is explicit: only EXTRACT_INPUT + bucket cross into
     Python — warc_ts/lang never pay the Arrow transfer.
     """
-    return size_bucket_repartition(pages).mapInPandas(
+    return size_bucket_repartition(pages.select(*EXTRACT_INPUT)).mapInPandas(
         _extract_batches, schema=EXTRACT_DDL
     )

@@ -13,7 +13,9 @@ The write-data-then-marker protocol (committed markers -> todo buckets
 -> dynamic-overwrite data write -> read-back -> IDEM markers) is
 ``operators.commit``'s; this module supplies the extract step and the
 per-bucket metrics aggregate. A killed run resumes recomputing exactly
-the uncommitted buckets (FIXTURES.md §3 restart test).
+the uncommitted buckets (FIXTURES.md §3 restart test). Each marker also
+records the salt count its bucket id was computed with, and a resume
+under another one is refused (_assert_same_buckets).
 """
 
 from __future__ import annotations
@@ -23,9 +25,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.extract.pipeline import _extract_batches, EXTRACT_DDL
+from ocr_spark.extract.pipeline import _extract_batches, EXTRACT_DDL, EXTRACT_INPUT
+from ocr_spark.operators import partitioning
 from ocr_spark.operators.commit import commit_run, committed_keys, read_markers
-from ocr_spark.operators.partitioning import bucket_size_class, size_bucket_repartition
 
 
 def _metrics_path(out_dir: str) -> str:
@@ -62,11 +64,12 @@ def run_extraction(
     kill between partition commits."""
     if validate:
         assert_unique_urls(pages)
+    _assert_same_buckets(spark, out_dir, run_id)
 
-    # bucket = restart granularity AND max parallelism of the run; it
-    # depends on (url, html bytes) only, so a resume at another core
-    # count finds every committed url in the bucket its marker names
-    bucketed = size_bucket_repartition(pages)
+    # bucket = restart granularity; it depends on (url, html bytes) only,
+    # so a resume at another core count finds every committed url in the
+    # bucket its marker names
+    bucketed = partitioning.size_bucket_repartition(pages.select(*EXTRACT_INPUT))
 
     n_buckets, n_rows = commit_run(
         spark,
@@ -83,11 +86,37 @@ def run_extraction(
     return {"run_id": run_id, "buckets_processed": n_buckets, "rows": n_rows}
 
 
+def _assert_same_buckets(spark: SparkSession, out_dir: str, run_id: str) -> None:
+    """A marker names a bucket, and which urls a bucket holds depends on
+    the salt count, so ``run_id`` may only resume under the salt count
+    its markers record. Markers without the ``salts`` column predate the
+    record (their salt count is unknown) and fail the same way."""
+    path = _metrics_path(out_dir)
+    if read_markers(spark, path) is None:
+        return
+    markers = (
+        spark.read.option("mergeSchema", "true")
+        .parquet(path)
+        .filter(F.col("run_id") == run_id)
+    )
+    salts = F.col("salts") if "salts" in markers.columns else F.lit(None)
+    other = markers.filter(~salts.eqNullSafe(partitioning.DEFAULT_SALT))
+    found = other.select(salts.alias("salts")).limit(1).collect()
+    if found:
+        raise ValueError(
+            f"run {run_id!r} in {out_dir} was committed with "
+            f"salts={found[0]['salts']}, this code buckets with "
+            f"salts={partitioning.DEFAULT_SALT}: resuming would duplicate or "
+            "drop documents; start a new run id in a new run dir"
+        )
+
+
 def _bucket_metrics(written: DataFrame) -> DataFrame:
     return written.groupBy(F.col("bucket").cast("int").alias("partition_id")).agg(
         F.count(F.lit(1)).alias("input_count"),
         F.expr("bit_xor(xxhash64(url, extracted_text))").alias("checksum"),
         (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_time_ms"),
+        F.lit(partitioning.DEFAULT_SALT).alias("salts"),
     )
 
 
@@ -112,10 +141,10 @@ def size_class_latches(
     others drain.
     """
     expected = (
-        size_bucket_repartition(pages)
+        partitioning.size_bucket_repartition(pages)
         .select("bucket")
         .distinct()
-        .groupBy(bucket_size_class(F.col("bucket")).alias("size_class"))
+        .groupBy(partitioning.bucket_size_class(F.col("bucket")).alias("size_class"))
         .agg(F.count(F.lit(1)).alias("n_expected"))
     )
     committed = committed_keys(spark, _metrics_path(out_dir), run_id, "partition_id")
@@ -123,7 +152,7 @@ def size_class_latches(
         committed = spark.createDataFrame([], "size_class int, n_committed long")
     else:
         committed = committed.groupBy(
-            bucket_size_class(F.col("partition_id")).alias("size_class")
+            partitioning.bucket_size_class(F.col("partition_id")).alias("size_class")
         ).agg(F.count(F.lit(1)).alias("n_committed"))
     return (
         expected.join(committed, "size_class", "left")

@@ -40,6 +40,11 @@ CONF = {
     # worker memory stays bounded at any corpus scale.
     "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # A committed extraction run writes one directory per bucket, at most
+    # 11 size classes x 16 salts (operators.partitioning). Above this many
+    # paths Spark lists them with a job of one task per directory, which
+    # cost ~0.3 s of a 3.3 s 6,000-page run at 44 buckets on 4 cores.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "256",
 }
 
 

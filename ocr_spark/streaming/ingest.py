@@ -279,6 +279,10 @@ def streaming_extract(spark: SparkSession, pages_dir: str, name: str = "extract_
     drops land in the table path and are extracted incrementally); the
     batch job stays the backfill/restart path.
 
+    The bucket exchange is kept for its skew defusal only (a stream has
+    no commit markers); AQE is off in streaming, so each micro-batch runs
+    spark.sql.shuffle.partitions extract tasks.
+
     No watermark: extraction is stateless per document, so the stream
     needs no event-time state — exactly the IDEM/once semantics of the
     batch commit markers, provided per-batch by the sink's epoch id.

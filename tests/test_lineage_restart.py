@@ -4,6 +4,9 @@ unchanged, and the final output is complete and golden-correct."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,3 +93,43 @@ def test_size_class_rollup(spark, pages, tmp_path_factory):
     assert all(r.complete for r in latches)
     assert sum(r.n_committed for r in latches) == n_buckets
     assert run_rollup_complete(spark, out, "r2", pages)
+
+
+def test_resume_under_other_salt_fails(spark, pages, tmp_path_factory, monkeypatch):
+    """A marker names a bucket, and a bucket's urls depend on the salt
+    count: a run committed under another salt count (or before the count
+    was recorded) must refuse to resume rather than duplicate or drop
+    documents, and must write nothing."""
+    from ocr_spark.operators import partitioning
+
+    out = str(tmp_path_factory.mktemp("lineage_salt"))
+    monkeypatch.setattr(partitioning, "DEFAULT_SALT", partitioning.DEFAULT_SALT * 2)
+    run_extraction(spark, pages, out, run_id="r3", max_buckets=K)
+    monkeypatch.undo()
+
+    def snapshot():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), out)
+            for d, _, fs in os.walk(out)
+            for f in fs
+        )
+
+    before = snapshot()
+    with pytest.raises(ValueError, match="salts="):
+        run_extraction(spark, pages, out, run_id="r3")
+    assert snapshot() == before
+
+    # markers written before the salt count was recorded
+    legacy = str(tmp_path_factory.mktemp("lineage_legacy"))
+    run_extraction(spark, pages, legacy, run_id="r4", max_buckets=K)
+    markers = read_metrics(spark, legacy).drop("salts").toPandas()
+    shutil.rmtree(f"{legacy}/metrics")
+    spark.createDataFrame(markers).write.parquet(f"{legacy}/metrics")
+    with pytest.raises(ValueError, match="salts=None"):
+        run_extraction(spark, pages, legacy, run_id="r4")
+    # another run id in the same dir is unaffected, and its markers (which
+    # record the salt count) do not hide the legacy ones'
+    assert run_extraction(spark, pages, legacy, run_id="r5")["rows"] == N_DOCS
+    assert run_extraction(spark, pages, legacy, run_id="r5")["buckets_processed"] == 0
+    with pytest.raises(ValueError, match="salts=None"):
+        run_extraction(spark, pages, legacy, run_id="r4")

@@ -41,12 +41,10 @@ def test_whale_page_batch_bytes_bounded(spark):
     small = spark.range(N_SMALL).select(
         F.concat(F.lit("http://small.example/p"), F.col("id")).alias("url"),
         F.repeat(F.lit("x"), SMALL_BYTES).cast("binary").alias("html"),
-        F.lit(None).cast("string").alias("text"),
     )
     whale = spark.range(1).select(
         F.lit("http://whale.example/big").alias("url"),
         F.repeat(F.lit("y"), WHALE_BYTES).cast("binary").alias("html"),
-        F.lit(None).cast("string").alias("text"),
     )
     corpus = small.unionByName(whale)
 

@@ -15,7 +15,9 @@ The job is one resumable, lineage-committed run
 buckets depend only on (url, html bytes), so a killed run may be
 resumed with the same ``--run-dir``/``--run-id`` on any number of
 cores: it processes exactly the uncommitted buckets, and a complete
-run's re-run processes none. The result line is the run's stats plus
+run's re-run processes none. A run dir whose markers record another
+salt count (or none) is refused with a ValueError before anything is
+written. The result line is the run's stats plus
 ``cores``, ``wall_s`` and ``docs_per_sec`` (rows committed by this call
 over its wall).
 """
