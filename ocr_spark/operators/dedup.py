@@ -13,9 +13,12 @@ Four tiers, each a registered catalog query over `documents`:
   d04 simhash      — 60-bit per-doc fingerprint computed entirely with
                      array higher-order functions: zero shuffle, zero
                      Python.
-  d05 embedding    — cosine near-dup pairs: distributed block-pair
-                     matmul prefilter (applyInPandas, no driver
-                     collect) + exact JVM-fold verify.
+  d05 embedding    — cosine near-dup pairs: sign-LSH bucket candidates
+                     with a per-bucket numpy prefilter + exact JVM-fold
+                     verify; d10 is its exact-recall twin (block-pair
+                     matmul). The embedding primitives (cosine, sign-LSH
+                     keys, centroid routing, the numpy kernel) are
+                     operators.similarity's, shared with e01–e05.
   d06 dup clusters — transitive near-dup groups: iterative min-label
                      propagation (connected components) over the d03
                      pair graph, matched against a recursive-CTE oracle.
@@ -42,6 +45,7 @@ from ocr_spark.functions.text import (
     norm_tokens,
     shingles3,
 )
+from ocr_spark.functions.vectors import cosine_similarity, cosine_sql
 from ocr_spark.plans import register
 from ocr_spark.sources.io import load_table
 
@@ -535,28 +539,19 @@ def _neardup_candidates_blocked(
     import numpy as np
     import pandas as pd
 
+    from ocr_spark.operators.similarity import cosine_block_pairs
+
     cut = threshold - margin
 
     def one_pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pa, pb = key
-        mat = np.array([list(e) for e in pdf["embedding"]], dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        mat = mat / norms[:, None]
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        blk = pdf["blk"].to_numpy()
+        emb = pdf["embedding"]
         if pa == pb:
-            cos = mat @ mat.T
-            ai, bi = np.nonzero(cos >= cut)
-            a, b = ids[ai], ids[bi]
-        else:
-            la, lb = blk == pa, blk == pb
-            cos = mat[la] @ mat[lb].T
-            ai, bi = np.nonzero(cos >= cut)
-            a, b = ids[la][ai], ids[lb][bi]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        keep = lo < hi
-        return pd.DataFrame({"a_id": lo[keep], "b_id": hi[keep]}).drop_duplicates()
+            return cosine_block_pairs(ids, emb, ids, emb, cut)
+        blk = pdf["blk"].to_numpy()
+        la, lb = blk == pa, blk == pb
+        return cosine_block_pairs(ids[la], emb[la], ids[lb], emb[lb], cut)
 
     e = emb.select(
         "vec_id",
@@ -595,8 +590,6 @@ def embedding_neardup_pairs(
     DuckDB's — the final values are oracle-exact, the prefilter only
     prunes.
     """
-    from ocr_spark.functions.vectors import cosine_similarity
-
     if candidates is None:
         candidates = _neardup_candidates_blocked(emb, threshold)
     a = emb.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb"))
@@ -654,21 +647,13 @@ def neardup_candidates_lsh(
     import numpy as np
     import pandas as pd
 
-    from ocr_spark.operators.similarity import lsh_keys_batch
+    from ocr_spark.operators.similarity import cosine_block_pairs, lsh_keys_batch
 
     cut = threshold - margin
 
     def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array([list(e) for e in pdf["embedding"]], dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        mat = mat / norms[:, None]
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        cos = mat @ mat.T
-        ai, bi = np.nonzero(cos >= cut)
-        a, b = ids[ai], ids[bi]
-        keep = a < b
-        return pd.DataFrame({"a_id": a[keep], "b_id": b[keep]}).drop_duplicates()
+        return cosine_block_pairs(ids, pdf["embedding"], ids, pdf["embedding"], cut)
 
     keyed = lsh_keys_batch(emb, dim, tables, planes, seed0=seed0)
     return (
@@ -686,57 +671,33 @@ def _neardup_lsh_oracle_sql(
     seed0: int = NEARDUP_LSH_SEED0,
 ) -> str:
     """DuckDB twin of the LSH-candidates → exact-cosine-verify path: the
-    ±1 sign planes are literal VALUES rows; the projection folds
-    left-to-right via list_reduce exactly like the JVM sequential fold,
-    so bucket keys — and therefore the candidate set — are
-    bit-identical (the e02 technique)."""
-    from ocr_spark.operators.similarity import _plane_signs
+    bucket keys are e02's sign-LSH fragment under ``seed0``, so they —
+    and therefore the candidate set — are bit-identical."""
+    from ocr_spark.operators.similarity import _lsh_keys_sql
 
-    rows = []
-    for t in range(tables):
-        for p, signs in enumerate(_plane_signs(dim, planes, seed=seed0 + t)):
-            lit = ", ".join(str(s) for s in signs)
-            rows.append(f"({t}, {p}, [{lit}]::DOUBLE[])")
-    values = ",\n      ".join(rows)
     return f"""
-    WITH planes(tbl, p, s) AS (VALUES
-      {values}
-    ),
-    keys AS (
-      SELECT e.vec_id, pl.tbl,
-             CAST(sum(CASE WHEN list_reduce(
-                 list_transform(range(1, {dim + 1}),
-                                i -> CAST(e.embedding[i] AS DOUBLE) * pl.s[i]),
-                 (a, b) -> a + b) > 0
-               THEN (CAST(1 AS BIGINT) << pl.p) ELSE 0 END) AS BIGINT) AS bucket
-      FROM embeddings e CROSS JOIN planes pl
-      GROUP BY e.vec_id, pl.tbl
-    ),
+    WITH {_lsh_keys_sql(dim, tables, planes, seed0)},
     cand AS (
       SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
       FROM keys a JOIN keys b ON a.tbl = b.tbl AND a.bucket = b.bucket
       WHERE a.vec_id < b.vec_id
     )
-    SELECT c.a_id, c.b_id,
-           round(list_cosine_similarity(CAST(ae.embedding AS DOUBLE[]),
-                                        CAST(be.embedding AS DOUBLE[])), 6) AS cos
-    FROM cand c
-    JOIN embeddings ae ON ae.vec_id = c.a_id
-    JOIN embeddings be ON be.vec_id = c.b_id
-    WHERE round(list_cosine_similarity(CAST(ae.embedding AS DOUBLE[]),
-                                       CAST(be.embedding AS DOUBLE[])), 6)
-          >= {threshold}
+    SELECT * FROM (
+      SELECT c.a_id, c.b_id,
+             round({cosine_sql("ae.embedding", "be.embedding")}, 6) AS cos
+      FROM cand c
+      JOIN embeddings ae ON ae.vec_id = c.a_id
+      JOIN embeddings be ON be.vec_id = c.b_id)
+    WHERE cos >= {threshold}
     """
 
 
 _NEARDUP_EXACT_ORACLE = f"""
-    SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(b.embedding AS DOUBLE[])), 6) AS cos
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                       CAST(b.embedding AS DOUBLE[])), 6)
-          >= {COSINE_NEARDUP_THRESHOLD}
+    SELECT * FROM (
+      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+             round({cosine_sql("a.embedding", "b.embedding")}, 6) AS cos
+      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
+    WHERE cos >= {COSINE_NEARDUP_THRESHOLD}
     """
 
 
@@ -1186,6 +1147,40 @@ def coverage_union_fold(sorted_starts, window: int):
     )
 
 
+def window_fingerprints(toks: DataFrame, window: int) -> DataFrame:
+    """(doc_id, s, h) for every sliding ``window``-token window of the
+    (doc_id, ts) token arrays: h = md5 of the space-joined window
+    starting at token s (0-based). Docs shorter than ``window`` have
+    none. The DuckDB twin is :func:`_window_fingerprints_sql`."""
+    return (
+        toks.filter(F.size("ts") >= window)
+        .select(
+            "doc_id",
+            F.explode(F.sequence(F.lit(0), F.size("ts") - window)).alias("s"),
+            "ts",
+        )
+        .select(
+            "doc_id",
+            "s",
+            F.md5(F.array_join(F.slice("ts", F.col("s") + 1, window), " ")).alias("h"),
+        )
+    )
+
+
+def _window_fingerprints_sql(window: int) -> str:
+    """DuckDB twin of :func:`window_fingerprints`: the CTEs ``toks``
+    (doc_id, ts) over ``documents`` and ``w`` (doc_id, s, h), to follow
+    a WITH."""
+    toks_sql = TOKENS_SQL.format(col="text")
+    return f"""toks AS (
+      SELECT doc_id, list_filter({toks_sql}, t -> t <> '') AS ts FROM documents
+    ), w AS (
+      SELECT doc_id, s, md5(array_to_string(ts[s + 1 : s + {window}], ' ')) AS h
+      FROM (SELECT doc_id, ts, unnest(range(0, len(ts) - {window} + 1)) AS s
+            FROM toks WHERE len(ts) >= {window})
+    )"""
+
+
 def dupspan_stats(
     docs: DataFrame,
     window: int = DUPSPAN_WINDOW,
@@ -1210,15 +1205,7 @@ def dupspan_stats(
     no W× position explode on the Spark side; the DuckDB oracle computes
     the same integer naively via distinct exploded positions."""
     toks = docs.select("doc_id", norm_tokens("text").alias("ts"))
-    w = toks.filter(F.size("ts") >= window).select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.size("ts") - window)).alias("s"),
-        "ts",
-    ).select(
-        "doc_id",
-        "s",
-        F.md5(F.array_join(F.slice("ts", F.col("s") + 1, window), " ")).alias("h"),
-    )
+    w = window_fingerprints(toks, window)
     freq = w.groupBy("h").agg(F.count_distinct("doc_id").alias("n_docs"))
     dup = freq.filter(F.col("n_docs") >= min_docs).select("h", "n_docs")
     hot = dup.filter(F.col("n_docs") >= hot_min)
@@ -1252,15 +1239,8 @@ def dupspan_stats(
 def _dupspan_oracle_sql(
     window: int = DUPSPAN_WINDOW, min_docs: int = DUPSPAN_MIN_DOCS
 ) -> str:
-    toks_sql = TOKENS_SQL.format(col="text")
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter({toks_sql}, t -> t <> '') AS ts FROM documents
-    ), w AS (
-      SELECT doc_id, s, md5(array_to_string(ts[s + 1 : s + {window}], ' ')) AS h
-      FROM (SELECT doc_id, ts, unnest(range(0, len(ts) - {window} + 1)) AS s
-            FROM toks WHERE len(ts) >= {window})
-    ), freq AS (
+    WITH {_window_fingerprints_sql(window)}, freq AS (
       SELECT h, count(DISTINCT doc_id) AS n_docs FROM w GROUP BY h
     ), dupw AS (
       SELECT doc_id, s FROM w JOIN freq USING (h) WHERE n_docs >= {min_docs}
@@ -1319,22 +1299,12 @@ def decontam_stats(
     wire).  Contrast d12 (`dupspan_stats`), where BOTH sides are the
     corpus and a heavy-hitter split is required.
 
-    Fingerprints are md5 over the space-joined window (the d12 scheme)
-    so the DuckDB oracle reproduces them bit-for-bit.
+    Fingerprints are d12's (:func:`window_fingerprints`: md5 over the
+    space-joined window) so the DuckDB oracle reproduces them
+    bit-for-bit.
     """
     toks = docs.select("doc_id", norm_tokens("text").alias("ts"))
-    w = (
-        toks.filter(F.size("ts") >= window)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.size("ts") - window)).alias("s"),
-            "ts",
-        )
-        .select(
-            "doc_id",
-            F.md5(F.array_join(F.slice("ts", F.col("s") + 1, window), " ")).alias("h"),
-        )
-    )
+    w = window_fingerprints(toks, window)
     is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == 0
     bench_h = w.filter(is_bench).select("h").distinct()
     hits = w.filter(~is_bench).join(F.broadcast(bench_h), "h")
@@ -1357,15 +1327,8 @@ def decontam_stats(
 def _decontam_oracle_sql(
     window: int = DECONTAM_WINDOW, bench_mod: int = DECONTAM_BENCH_MOD
 ) -> str:
-    toks_sql = TOKENS_SQL.format(col="text")
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter({toks_sql}, t -> t <> '') AS ts FROM documents
-    ), w AS (
-      SELECT doc_id, md5(array_to_string(ts[s + 1 : s + {window}], ' ')) AS h
-      FROM (SELECT doc_id, ts, unnest(range(0, len(ts) - {window} + 1)) AS s
-            FROM toks WHERE len(ts) >= {window})
-    ), bench AS (
+    WITH {_window_fingerprints_sql(window)}, bench AS (
       SELECT DISTINCT h FROM w WHERE doc_id % {bench_mod} = 0
     ), hits AS (
       SELECT w.doc_id, count(*) AS n_contam_windows
@@ -1401,9 +1364,10 @@ def semantic_dedup(
     cluster, keeping the member farthest from its centroid (the paper's
     keep-the-outlier rule; deterministic tie-break on vec_id).
 
-    Scale shape: assignment is the e04 routing — centroids fold into a
-    ONE-ROW broadcast array and every vector argmins per-row (no
-    Window, no exchange of the n x k scored set); the only corpus-sized
+    Scale shape: assignment calls e04's router
+    (operators.similarity.nearest_cells over centroid_row) — centroids
+    fold into a ONE-ROW broadcast array and every vector argmins per-row
+    (no Window, no exchange of the n x k scored set); the only corpus-sized
     exchange is the within-cell self-join on the cell id, whose
     quadratic cost is bounded by the cell size — SemDeDup's design
     point is that k grows with the corpus so |cell| stays budgeted
@@ -1414,36 +1378,17 @@ def semantic_dedup(
     Returns one row per vector: (vec_id, cell, cc_micros, keep) —
     cc_micros = floor(1e6 x cos(vector, assigned centroid)).
     """
-    from ocr_spark.functions.vectors import cosine_similarity
-    from ocr_spark.operators.similarity import label_centroids
+    from ocr_spark.operators.similarity import (
+        centroid_row,
+        label_centroids,
+        nearest_cells,
+    )
 
-    cent_row = F.broadcast(
-        label_centroids(emb).agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("label").alias("cell"), F.col("centroid"))
-                )
-            ).alias("cents")
-        )
+    cents = centroid_row(
+        label_centroids(emb).select(F.col("label").alias("cell"), "centroid")
     )
-    scores = F.array_sort(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                (-cosine_similarity(F.col("embedding"), c["centroid"])).alias("nc"),
-                c["cell"].alias("cl"),
-            ),
-        )
-    )
-    m = (
-        emb.crossJoin(cent_row)
-        .select("vec_id", "embedding", F.element_at(scores, 1).alias("best"))
-        .select(
-            "vec_id",
-            "embedding",
-            F.col("best.cl").cast("int").alias("cell"),
-            (-F.col("best.nc")).alias("cc"),
-        )
+    m = nearest_cells(emb.select("vec_id", "embedding"), cents).select(
+        "vec_id", "embedding", F.col("cell").cast("int").alias("cell"), "cc"
     )
     a = m.select(
         "cell",
@@ -1480,27 +1425,17 @@ def semantic_dedup(
 
 
 def _semdedup_oracle_sql(threshold: float = SEMDEDUP_THRESHOLD) -> str:
+    from ocr_spark.operators.similarity import _mean_centroids_sql, _nearest_cells_sql
+
     return f"""
-    WITH pos AS (
-      SELECT label, unnest(embedding) AS v,
-             unnest(range(1, len(embedding) + 1)) AS pos
-      FROM embeddings
-    ), cent AS (
-      SELECT label, list(m ORDER BY pos) AS centroid
-      FROM (SELECT label, pos, avg(v) AS m FROM pos GROUP BY label, pos)
-      GROUP BY label
+    WITH cent AS ({_mean_centroids_sql("embeddings", "label")}
     ), assign AS (
-      SELECT e.vec_id, e.embedding, CAST(c.label AS INT) AS cell,
-             list_cosine_similarity(e.embedding, c.centroid) AS cc
-      FROM embeddings e CROSS JOIN cent c
-      QUALIFY row_number() OVER (
-        PARTITION BY e.vec_id
-        ORDER BY list_cosine_similarity(e.embedding, c.centroid) DESC,
-                 c.label ASC) = 1
+      SELECT vec_id, embedding, CAST(cell AS INT) AS cell, cc
+      FROM ({_nearest_cells_sql()}) WHERE crn = 1
     ), drops AS (
       SELECT DISTINCT b.vec_id
       FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-      WHERE list_cosine_similarity(a.embedding, b.embedding) >= {threshold}
+      WHERE {cosine_sql("a.embedding", "b.embedding")} >= {threshold}
         AND (a.cc < b.cc OR (a.cc = b.cc AND a.vec_id < b.vec_id))
     )
     SELECT m.vec_id, m.cell,

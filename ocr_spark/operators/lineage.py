@@ -57,13 +57,11 @@ def run_extraction(
     out_dir: str,
     run_id: str,
     max_buckets: int | None = None,
-    validate: bool = False,
 ) -> dict:
     """Execute (or resume) one extraction run. ``max_buckets`` processes
     only the first K uncommitted buckets — the test hook that simulates a
-    kill between partition commits."""
-    if validate:
-        assert_unique_urls(pages)
+    kill between partition commits. The caller owns the input contract
+    (:func:`assert_unique_urls`); tools/extract_job.py checks it."""
     _assert_same_buckets(spark, out_dir, run_id)
 
     # bucket = restart granularity; it depends on (url, html bytes) only,

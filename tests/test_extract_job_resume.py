@@ -23,14 +23,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_DOCS = 300
 
 
-def _submit(cores: int, input_dir: str, run_dir: str, out_json: str) -> dict:
+def _run_job(
+    cores: int, input_dir: str, run_dir: str, out_json: str
+) -> subprocess.CompletedProcess:
     env = dict(
         os.environ,
         PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])),
         PYSPARK_PYTHON=sys.executable,
         PYSPARK_DRIVER_PYTHON=sys.executable,
     )
-    proc = subprocess.run(
+    return subprocess.run(
         [
             os.path.join(_find_spark_home(), "bin", "spark-submit"),
             "--master", f"local[{cores}]",
@@ -47,6 +49,10 @@ def _submit(cores: int, input_dir: str, run_dir: str, out_json: str) -> dict:
         text=True,
         timeout=600,
     )
+
+
+def _submit(cores: int, input_dir: str, run_dir: str, out_json: str) -> dict:
+    proc = _run_job(cores, input_dir, run_dir, out_json)
     assert proc.returncode == 0, proc.stderr[-3000:]
     with open(out_json) as f:
         return json.load(f)
@@ -72,3 +78,22 @@ def test_resume_at_another_core_count_is_noop(spark, tmp_path):
     assert out.join(pages.select("url"), "url", "left_anti").count() == 0
     # the result line times the committed run
     assert first["wall_s"] > 0 and first["docs_per_sec"] > 0
+
+
+def test_duplicate_urls_fail_before_any_write(spark, tmp_path):
+    """FIXTURES.md §4 under spark-submit: an input with a duplicate url
+    row makes the job exit non-zero naming the url, and nothing is
+    extracted into the run dir. spark-submit's Python runner merges the
+    job's stderr into its stdout, so the url is looked for in both."""
+    input_dir = str(tmp_path / "pages")
+    pages = pages_df(spark, 20)
+    dup = pages.limit(1)
+    (url,) = dup.select("url").first()
+    pages.unionByName(dup).write.parquet(input_dir)
+    run_dir = str(tmp_path / "run")
+
+    proc = _run_job(2, input_dir, run_dir, str(tmp_path / "out.json"))
+    assert proc.returncode != 0
+    output = proc.stdout + proc.stderr
+    assert f"duplicate url in input: {url!r}" in output, output[-3000:]
+    assert not os.path.exists(os.path.join(run_dir, "extracted"))

@@ -134,3 +134,52 @@ def test_lsh_keys_batch_matches_jvm_fold(spark, sf_dir):
         ).collect()
     }
     assert jvm == np_keys and len(jvm) == emb.count() * tables
+
+
+def test_zero_norm_embedding_matches_oracle(spark, sf_dir, tmp_path):
+    """One all-zero candidate vector: its cosine with anything is 0.0 in
+    both engines (functions.vectors.cosine_similarity / cosine_sql), so
+    every embedding entry still matches its oracle. Without the rule
+    Spark with ANSI on raises DIVIDE_BY_ZERO and DuckDB returns -1.0."""
+    import os
+
+    import duckdb
+
+    from ocr_spark.oracle import compare, register_duckdb_views
+    from ocr_spark.plans import ORACLE
+    from ocr_spark.operators.similarity import EMBEDDING_DIM
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    dst = tmp_path / "embeddings.parquet"
+    con = duckdb.connect()
+    con.sql(
+        f"""COPY (
+          SELECT * FROM read_parquet('{src}')
+          UNION ALL
+          SELECT (SELECT max(vec_id) + 1 FROM read_parquet('{src}')),
+                 CAST(list_transform(range({EMBEDDING_DIM}), i -> 0) AS FLOAT[]),
+                 CAST(0 AS INTEGER)
+        ) TO '{dst}' (FORMAT PARQUET)"""
+    )
+    register_duckdb_views(con, str(tmp_path), ["embeddings"])
+    (zero_id,) = con.sql("SELECT max(vec_id) FROM embeddings").fetchone()
+
+    for name in (
+        "e01_knn_bruteforce",
+        "e02_ann_lsh",
+        "e03_centroid_assign",
+        "e04_ivf_knn",
+        "d05_embedding_neardup",
+        "d10_neardup_exact",
+        "d14_semantic_dedup",
+    ):
+        mismatch = compare(QUERIES[name](spark, str(tmp_path)), con, ORACLE[name])
+        assert mismatch is None, f"{name}: {mismatch}"
+
+    # cosine 0.0 with every centroid: the tie goes to the lowest cell
+    (row,) = (
+        QUERIES["e03_centroid_assign"](spark, str(tmp_path))
+        .filter(F.col("vec_id") == zero_id)
+        .collect()
+    )
+    assert row.assigned_label == 0

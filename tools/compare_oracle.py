@@ -13,7 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from ocr_spark.oracle import compare, register_duckdb_views
+from ocr_spark.oracle import gate, register_duckdb_views
 from ocr_spark.plans import ORACLE, QUERIES, load_all
 from ocr_spark.session import build_session
 from ocr_spark.sources.io import TESTDATA_TABLES
@@ -31,11 +31,7 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            if name not in ORACLE:
-                print(f"ok   {name}: rows-only ({sdf.count()} rows)")
-                continue
-            mismatch = compare(sdf, con, ORACLE[name])
+            row, mismatch = gate(fn(spark, sf_dir), con, ORACLE.get(name))
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {e}")
             failures += 1
@@ -43,6 +39,8 @@ def main() -> int:
         if mismatch:
             print(f"FAIL {name}: {mismatch}")
             failures += 1
+        elif row["err"] == "no_oracle":
+            print(f"ok   {name}: rows-only ({row['spark_rows']} rows)")
         else:
             print(f"ok   {name}")
     spark.stop()

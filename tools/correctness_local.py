@@ -24,43 +24,17 @@ sys.path.insert(0, REPO)
 
 import duckdb
 
-from ocr_spark.oracle import canon, register_duckdb_views
+from ocr_spark.oracle import GATE_ROW, gate, register_duckdb_views
 from ocr_spark.plans import ORACLE, QUERIES, load_all
 from ocr_spark.session import build_session
 from ocr_spark.sources.io import TESTDATA_TABLES
 
 
 def gate_row(spark, con, name: str, sf_dir: str) -> dict:
-    row = {
-        "rows_match": None,
-        "schema_match": None,
-        "hash_match": None,
-        "spark_rows": None,
-        "oracle_rows": None,
-        "err": None,
-    }
     try:
-        sdf = QUERIES[name](spark, sf_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        row["spark_rows"] = len(s_rows)
-        if name not in ORACLE:
-            row["err"] = "no_oracle"
-            return row
-        rel = con.sql(ORACLE[name])
-        d_cols = rel.columns
-        d_rows = rel.fetchall()
-        row["oracle_rows"] = len(d_rows)
-        row["rows_match"] = len(s_rows) == len(d_rows)
-        row["schema_match"] = sorted(s_cols) == sorted(d_cols)
-        row["hash_match"] = (
-            row["rows_match"]
-            and row["schema_match"]
-            and canon(s_rows, s_cols) == canon(d_rows, d_cols)
-        )
+        return gate(QUERIES[name](spark, sf_dir), con, ORACLE.get(name))[0]
     except Exception as e:  # noqa: BLE001
-        row["err"] = f"{type(e).__name__}: {e}"[:300]
-    return row
+        return dict(GATE_ROW, err=f"{type(e).__name__}: {e}"[:300])
 
 
 SF_DIR = "/root/testdata/sf0.01"

@@ -17,7 +17,9 @@ resumed with the same ``--run-dir``/``--run-id`` on any number of
 cores: it processes exactly the uncommitted buckets, and a complete
 run's re-run processes none. A run dir whose markers record another
 salt count (or none) is refused with a ValueError before anything is
-written. The result line is the run's stats plus
+written, and so is an input with a duplicate url (FIXTURES.md §4: the
+job fails fast, naming the url, before the timed run). The result
+line is the run's stats plus
 ``cores``, ``wall_s`` and ``docs_per_sec`` (rows committed by this call
 over its wall).
 """
@@ -50,9 +52,10 @@ def main() -> None:
     spark = job_session()
     spark.sparkContext.setLogLevel("WARN")
 
-    from ocr_spark.operators.lineage import run_extraction
+    from ocr_spark.operators.lineage import assert_unique_urls, run_extraction
 
     pages = spark.read.parquet(args.input)
+    assert_unique_urls(pages)
     t0 = time.perf_counter()
     stats = run_extraction(spark, pages, args.run_dir, args.run_id)
     wall = time.perf_counter() - t0
